@@ -423,11 +423,17 @@ object Bench {
     val rts = repTimes.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
     val rgc = repGcMs.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
     val rawq = rawMedians.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // a failed line reports -1 and is left out of the sum, so the total
+    // of a run with failures covers fewer lines: it is marked
+    // non-comparable and the failed names travel with it
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val failedNames = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val fails = s""""n_failed":${failed.size},"failed":$failedNames,"comparable":${failed.isEmpty}"""
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalRaw = results.collect {
       case (k, v) if v >= 0 => rawMedians.getOrElse(k, v)
     }.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_raw":$totalRaw,"queries":$qs,"queries_raw":$rawq,"spread":$sp,"spread_pre":$spp,"reps":$rps,"warmups":$wus,"warmin_dropped":$wdr,"rep_times":$rts,"rep_gc_ms":$rgc,"cluster_rounds":$ccRounds,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_raw":$totalRaw,$fails,"queries":$qs,"queries_raw":$rawq,"spread":$sp,"spread_pre":$spp,"reps":$rps,"warmups":$wus,"warmin_dropped":$wdr,"rep_times":$rts,"rep_gc_ms":$rgc,"cluster_rounds":$ccRounds,"sf":"$sfDir"}"""
     // the driver captures a bounded stdout TAIL: the ~14k-char full
     // line overflowed it two rounds running ("parsed": null), so the
     // ONE stdout JSON line is now the CONTRACT fields only — metric,
@@ -464,9 +470,10 @@ object Bench {
     // variable-length fields (paths) get a bounded fallback instead of
     // an exception — the bench must still report its totals.
     val compactFull =
-      s"""{"metric":"total","value":${r3s(total)},"unit":"sec","value_raw":${r3s(totalRaw)},"n_queries":${results.size},"queries_parts":${chunks.size},"artifact":"$outFile","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3s(total)},"unit":"sec","value_raw":${r3s(totalRaw)},$fails,"n_queries":${results.size},"queries_parts":${chunks.size},"artifact":"$outFile","sf":"$sfDir"}"""
+    // over the bound the failed names stay in the artifact only
     val compact = if (compactFull.length <= 500) compactFull
-      else s"""{"metric":"total","value":${r3s(total)},"unit":"sec","value_raw":${r3s(totalRaw)},"n_queries":${results.size},"queries_parts":${chunks.size}}"""
+      else s"""{"metric":"total","value":${r3s(total)},"unit":"sec","value_raw":${r3s(totalRaw)},"n_failed":${failed.size},"comparable":${failed.isEmpty},"n_queries":${results.size},"queries_parts":${chunks.size}}"""
     try {
       val p = java.nio.file.Paths.get(outFile)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)

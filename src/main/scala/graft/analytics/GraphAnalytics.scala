@@ -653,24 +653,6 @@ object GraphAnalytics {
     (mis, rounds)
   }
 
-  /** k-core decomposition (Seidman 1983): iteratively peel vertices of
-    * degree < k until fixpoint; returns the surviving vertices with
-    * their WITHIN-CORE degree. Deterministic — the peel set of each
-    * round is degree-defined, no tie-breaking.
-    *
-    * Each round is one degree aggregation plus two semi-joins, with
-    * `localCheckpoint` cutting the per-round lineage (the
-    * [[hopDistancesDF]] contract). The edge set only shrinks, so
-    * round cost is monotone non-increasing; real graphs converge in a
-    * handful of rounds because whole low-degree fringes peel at once.
-    * `maxIters` bounds the loop LOUDLY (IllegalStateException, never a
-    * silently-unconverged answer) — on 100 TB pathologies (a long
-    * path peeling one vertex per round) raise the bound consciously
-    * instead of discovering a hang.
-    *
-    * Returns (vertices (id, degree), rounds) — rounds feeds the
-    * oracle's unrolled-peel SQL rendering.
-    */
   /** Release the cached blocks behind an eager `localCheckpoint` once
     * a round's successor frame is materialized — iterative loops
     * otherwise pin every round's partitions (x bench reps) in the
@@ -711,6 +693,31 @@ object GraphAnalytics {
     if (gauge.rdd.getNumPartitions >= p) df else df.repartition(p, key)
   }
 
+  /** k-core decomposition (Seidman 1983): iteratively peel vertices of
+    * degree < k until fixpoint; returns the surviving vertices with
+    * their WITHIN-CORE degree. Deterministic — the peel set of each
+    * round is degree-defined, no tie-breaking.
+    *
+    * Frontier-incremental: the canonical undirected edge set `e0` is
+    * checkpointed once and never rewritten, and the full degree
+    * aggregation over it runs exactly once. Each peel round then
+    * subtracts, from the (id, degree) frame, the edges the peeled
+    * vertices take with them — a scan of `e0` in both orientations,
+    * semi-joined to the peel set before its groupBy — so per-round
+    * shuffle volume tracks the frontier, not |E|. `localCheckpoint`
+    * cuts the per-round lineage (the [[hopDistancesDF]] contract), and
+    * the below-k count rides that checkpoint as an observed metric, so
+    * a round is one job. Real graphs converge in a handful of rounds
+    * because whole low-degree fringes peel at once. `maxIters` bounds
+    * the loop LOUDLY through `require` (an IllegalArgumentException,
+    * never a silently-unconverged answer) — on 100 TB pathologies (a
+    * long path peeling one vertex per round) raise the bound
+    * consciously instead of discovering a hang.
+    *
+    * Returns (vertices (id, degree), rounds) — rounds counts every
+    * effective peel plus the final no-op round that proves the
+    * fixpoint, and feeds the oracle's unrolled-peel SQL rendering.
+    */
   def kCore(edges: DataFrame, k: Int, maxIters: Int = 30): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
     // edge frames checkpoint MEMORY_AND_DISK (r16 optimization): the

@@ -234,49 +234,112 @@ object GraphSnapshot {
     * what an in-place close would have written. A DELETE delta is a
     * tombstone (tx_max = tx_min): it closes its predecessor via the
     * lead window and is itself dead under every visibility predicate.
-    * Cost: one hash shuffle per table by id at read time, which
-    * [[compactDeltas]] removes; per-batch write cost stays O(batch)
-    * instead of O(corpus).
+    * Versions with the same tx_min (a crash duplicate, see
+    * [[compactDeltas]]) order the open copy first, so it closes at its
+    * own tx_min and the base copy keeps the tx_max compaction gave it.
+    *
+    * The view holds every version; each reader applies its own
+    * visibility predicate. It is materialized (eager `localCheckpoint`)
+    * once per STORE STATE — the manifest plus the base and delta data
+    * files of each table — and served to every open of that state, the
+    * way the reference loads its graph into memory once (STMGraph
+    * Raw.hs:112-175). Cost: one hash shuffle by id per CHANGED table,
+    * paid by the first open after a commit, a republish or a purge and
+    * tagged with the job description `openWithDeltas:refresh`; an open
+    * of an unchanged state only lists the store's files, and its reads
+    * scan the in-memory view — no window, no exchange, no parquet.
+    * Per-batch write cost stays O(batch); [[compactDeltas]] bounds the
+    * delta count. A superseded view is never freed explicitly: a reader
+    * still holding it keeps reading it, and Spark's ContextCleaner
+    * releases its blocks once nothing references it. Being an RDD
+    * scan, the view never matches a file relation in Spark's
+    * CacheManager, so a user's `persist()` of an opened frame cannot be
+    * served to a later state.
     */
   def openWithDeltas(spark: SparkSession, dir: String): GraphSnapshot = {
-    def empty(schema: StructType): DataFrame =
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    val (baseNodes, baseEdges) =
-      if (readManifest(dir).isDefined) { val g = open(spark, dir); (g.nodes, g.edges) }
-      else (empty(nodeSchema), empty(edgeSchema))
-    def merged(base: DataFrame, schema: StructType, deltaDir: String): DataFrame = {
-      val deltas =
-        if (Sidecar.exists(deltaDir))
-          spark.read.schema(schema)
-            .option("recursiveFileLookup", "true").parquet(deltaDir)
-        else empty(schema)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("tx_min"))
-      base.unionByName(deltas)
-        .withColumn("tx_max", coalesce(col("tx_max"), lead(col("tx_min"), 1).over(w)))
+    val s = servedFor(spark, dir)
+    s.synchronized { // concurrent opens of one state rebuild once
+      val manifest = readManifest(dir)
+      s.nodes = refreshed(s.nodes, spark, dir, manifest, "nodes", "node_deltas", nodeSchema)
+      s.edges = refreshed(s.edges, spark, dir, manifest, "edges", "edge_deltas", edgeSchema)
+      GraphSnapshot(s.nodes.df, s.edges.df)
     }
-    GraphSnapshot(
-      merged(baseNodes, nodeSchema, s"$dir/node_deltas"),
-      merged(baseEdges, edgeSchema, s"$dir/edge_deltas"))
   }
 
-  /** Fold streaming deltas into the published base: materialize the
+  /** One table's served view and the state it was built from. */
+  private final case class View(manifest: Option[String], files: Seq[String], df: DataFrame)
+
+  /** A store dir's served views, per table (null until first open). */
+  private final class Served {
+    var nodes: View = _
+    var edges: View = _
+  }
+
+  // One entry per (session, store dir), LRU-bounded like
+  // GraphAnalytics.graphCache. Eviction only drops the reference: a
+  // reader may still hold the evicted views (see openWithDeltas).
+  private val MaxServed = 8
+  private val served =
+    new java.util.LinkedHashMap[(SparkSession, String), Served](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(SparkSession, String), Served]): Boolean =
+        size() > MaxServed
+    }
+
+  private def servedFor(spark: SparkSession, dir: String): Served = served.synchronized {
+    // a session compares by identity; get() refreshes LRU order
+    val key = (spark, new org.apache.hadoop.fs.Path(dir).toString)
+    Option(served.get(key)).getOrElse { val s = new Served; served.put(key, s); s }
+  }
+
+  /** `cur` if the table's state is unchanged, else a fresh merge. The
+    * listing comes first, so a file landing before the merge reads is
+    * in the view but not in its state: the next open rebuilds once
+    * more, never serves an older state than it listed.
+    */
+  private def refreshed(cur: View, spark: SparkSession, dir: String, manifest: Option[String],
+      table: String, deltaDir: String, schema: StructType): View = {
+    val baseFiles = if (manifest.isDefined) Sidecar.dataFiles(s"$dir/$table") else Nil
+    val deltaFiles = Sidecar.dataFiles(s"$dir/$deltaDir")
+    val files = baseFiles ++ deltaFiles
+    if (cur != null && cur.manifest == manifest && cur.files == files) cur
+    else {
+      val base = if (baseFiles.isEmpty) empty(spark, schema)
+        else spark.read.schema(schema).parquet(s"$dir/$table")
+      val deltas = if (deltaFiles.isEmpty) empty(spark, schema)
+        else spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(s"$dir/$deltaDir")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("id")).orderBy(col("tx_min"), col("tx_max").asc_nulls_first)
+      val merged = base.unionByName(deltas)
+        .withColumn("tx_max", coalesce(col("tx_max"), lead(col("tx_min"), 1).over(w)))
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription("openWithDeltas:refresh")
+      try View(manifest, files, merged.localCheckpoint(true))
+      finally sc.setJobDescription(prev)
+    }
+  }
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** Fold streaming deltas into the published base: take the served
     * merge-on-read view, drop versions dead before `horizon`
     * (Mvcc.compact), republish, then remove the delta directories.
-    * Plain [[open]] serves reads with zero merge work afterwards.
+    * The view is already materialized, so the republish reads it, not
+    * the files it overwrites. The next [[openWithDeltas]] sees the new
+    * manifest and base files and rebuilds its view from them, now over
+    * zero deltas; plain [[open]] serves reads with no merge at all.
     * Crash-safe ordering: the base is republished BEFORE deltas are
     * deleted — a crash in between leaves duplicate (id, tx_min)
-    * versions, which the merge-on-read window resolves (the first
-    * copy derives tx_max = its own tx_min and drops out of every
-    * visibility predicate).
+    * versions, which the merge-on-read window resolves (the delta copy
+    * orders first, derives tx_max = its own tx_min and drops out of
+    * every visibility predicate).
     */
   def compactDeltas(spark: SparkSession, dir: String, horizon: Long = 0L): Unit = {
     val g = openWithDeltas(spark, dir)
-    // localCheckpoint cuts lineage to the files about to be overwritten
-    val folded = GraphSnapshot(
-      graft.operators.Mvcc.compact(g.nodes, horizon).localCheckpoint(true),
-      graft.operators.Mvcc.compact(g.edges, horizon).localCheckpoint(true))
-    folded.write(dir)
+    GraphSnapshot(
+      graft.operators.Mvcc.compact(g.nodes, horizon),
+      graft.operators.Mvcc.compact(g.edges, horizon)).write(dir)
     Seq("node_deltas", "edge_deltas").foreach { d =>
       Sidecar.delete(s"$dir/$d", recursive = true)
     }

@@ -324,6 +324,28 @@ object Sidecar {
     catch { case _: java.io.FileNotFoundException => 0L }
   }
 
+  /** Fully qualified paths of the data files under `dir`, recursively
+    * and sorted (empty if absent) — the files a parquet read of `dir`
+    * lists: names starting with `.` or `_` (checksums, `_SUCCESS`, a
+    * committer's `_temporary` tree) are skipped at every depth, except
+    * `col=value` partition directories. Overwrites and republishes
+    * write new uuid-named part files, so the listing is a version
+    * signal for the store state.
+    */
+  def dataFiles(dir: String): Seq[String] = {
+    val (fs, p) = fsFor(dir)
+    def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    // a directory removed mid-listing (a compaction's delete) reads as empty
+    def walk(d: Path): Seq[String] =
+      (try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .flatMap { s =>
+          if (hidden(s.getPath.getName)) Nil
+          else if (s.isDirectory) walk(s.getPath)
+          else Seq(s.getPath.toString)
+        }
+    walk(p).sorted
+  }
+
   /** Child names of `dir` (empty if absent). */
   def listNames(dir: String): Seq[String] = {
     val (fs, p) = fsFor(dir)

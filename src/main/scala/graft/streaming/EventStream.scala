@@ -139,7 +139,10 @@ object EventStream {
 
   /** One micro-batch of the delta-append upsert sink: aggregate the
     * batch's events per user and write them as fresh node versions to
-    * `node_deltas/delta_<tx>` (overwrite = idempotent replay).
+    * `node_deltas/delta_<tx>` (overwrite = idempotent replay). A batch
+    * is O(batch) rows, so each leg writes ONE parquet file per table:
+    * every merge-on-read refresh lists and scans one file per commit,
+    * not one per input partition.
     */
   def upsertUserBatch(batch: DataFrame, tx: Long, snapshotDir: String): Unit = {
     import org.apache.spark.sql.functions.{count => cnt}
@@ -148,6 +151,7 @@ object EventStream {
         graft.model.PropValues.propsMap(
           "events" -> graft.model.PropValues.pvInt(col("n"))).as("props"),
         lit(tx).as("tx_min"), lit(null).cast("long").as("tx_max"))
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"$snapshotDir/node_deltas/delta_$tx")
   }
 
@@ -171,6 +175,7 @@ object EventStream {
         col("label"), col("props"),
         lit(tx).as("tx_min"),
         when(del, lit(tx)).otherwise(lit(null)).cast("long").as("tx_max"))
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"$snapshotDir/edge_deltas/delta_$tx")
   }
 
@@ -213,7 +218,7 @@ object EventStream {
           "name" -> graft.model.PropValues.pvText(col("event_type")),
           "events" -> graft.model.PropValues.pvInt(col("n"))).as("props"),
         lit(tx).as("tx_min"), lit(null).cast("long").as("tx_max"))
-    users.unionByName(types)
+    users.unionByName(types).coalesce(1)
       .write.mode("overwrite").parquet(s"$snapshotDir/node_deltas/delta_$tx")
     val pairEdges = batch.groupBy(col("user_id"), col("event_type"))
       .agg(cnt(lit(1)).as("n"))
