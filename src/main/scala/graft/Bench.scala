@@ -411,9 +411,6 @@ object Bench {
       (if (wanted("index_build")) Seq("index_build" -> timed("index_build", () => indexBuild())) else Nil) ++
       (if (wanted("ivf_train")) Seq("ivf_train" -> timed("ivf_train", () => ivfTrain())) else Nil) ++
       (if (wanted("bpe_train")) Seq("bpe_train" -> timed("bpe_train", () => bpeTrain())) else Nil)
-    // convergence rounds of the last clustering run: a swing in rounds
-    // explains a swing in seconds (q_dedup_cluster is iterative)
-    val ccRounds = graft.operators.Components.lastRounds
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val sp = spreads.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val spp = spreadsPre.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -433,7 +430,7 @@ object Bench {
     val totalRaw = results.collect {
       case (k, v) if v >= 0 => rawMedians.getOrElse(k, v)
     }.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_raw":$totalRaw,$fails,"queries":$qs,"queries_raw":$rawq,"spread":$sp,"spread_pre":$spp,"reps":$rps,"warmups":$wus,"warmin_dropped":$wdr,"rep_times":$rts,"rep_gc_ms":$rgc,"cluster_rounds":$ccRounds,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_raw":$totalRaw,$fails,"queries":$qs,"queries_raw":$rawq,"spread":$sp,"spread_pre":$spp,"reps":$rps,"warmups":$wus,"warmin_dropped":$wdr,"rep_times":$rts,"rep_gc_ms":$rgc,"sf":"$sfDir"}"""
     // the driver captures a bounded stdout TAIL: the ~14k-char full
     // line overflowed it two rounds running ("parsed": null), so the
     // ONE stdout JSON line is now the CONTRACT fields only — metric,

@@ -4,11 +4,10 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Generic stage-level evidence tool for ANY catalog query — the
-  * [[ProbeHits]] instrument generalized for the r16 optimization
-  * round (guide §1: measure first; §7.1: decide whether the time is
-  * compute, shuffle, or per-stage fixed latency BEFORE touching the
-  * plan).
+/** Generic stage-level evidence tool for ANY catalog query, built
+  * for the r16 optimization round (guide §1: measure first; §7.1:
+  * decide whether the time is compute, shuffle, or per-stage fixed
+  * latency BEFORE touching the plan).
   *
   * Runs each named query `reps` times through the same noop sink the
   * bench uses, under a listener capturing per-stage wall, executor

@@ -98,27 +98,6 @@ object GraphAnalytics {
       .toDF("id", "component")
   }
 
-  /** Connected components as pure DataFrame iteration (HashMin label
-    * propagation): every round each vertex takes the minimum
-    * component id among itself and its neighbors; stop when a round
-    * changes nothing. Converges to the same (id, component=min id)
-    * contract as GraphX `connectedComponents`
-    * (AnalyticsStreamingSpec proves agreement). O(diameter) rounds of
-    * two shuffles each, no DataFrame→RDD conversion and no Pregel
-    * superstep scheduling — the fast path for the bounded-diameter
-    * graphs real traversals produce; keep the GraphX form for
-    * unknown/deep diameters where its incremental-activation model
-    * pays off.
-    */
-  def connectedComponentsDF(spark: SparkSession, g: GraphSnapshot,
-      maxIters: Int = 50): DataFrame = {
-    val live = g.live
-    graft.operators.Components.minLabel(
-      live.nodes.select(col("id")),
-      live.edges.select(col("src").as("u"), col("dst").as("v")),
-      maxIters)
-  }
-
   /** Fixed-iteration PageRank (resetProb 0.15), unnormalized GraphX
     * semantics: r' = 0.15 + 0.85 * sum(incoming r / outdeg).
     */
@@ -129,14 +108,13 @@ object GraphAnalytics {
       .toDF("id", "rank")
   }
 
-  /** Bounded-hop BFS as iterative DataFrame joins — the fast path for
-    * small `maxHops`. Each hop is one equi-join frontier⋈edges plus an
-    * anti-join against the reached set: no DataFrame→RDD conversion,
-    * no Pregel superstep scheduling, and Catalyst prunes the edge scan
-    * to (src,dst). Semantics match [[hopDistances]]: minimum hop
+  /** Bounded-hop BFS as iterative DataFrame joins: minimum hop
     * distance from `sources` within `maxHops`, sources restricted to
-    * live node ids. Use the Pregel form for genuinely iterative depths
-    * (unknown diameter), this one when hops are bounded and small.
+    * live node ids. Each hop is one equi-join frontier⋈edges plus an
+    * anti-join against the reached set — no DataFrame→RDD conversion,
+    * no Pregel superstep scheduling, and Catalyst prunes the edge scan
+    * to (src,dst). Every hop's frontier is checkpointed and kept: the
+    * result is their union.
     */
   def hopDistancesDF(spark: SparkSession, g: GraphSnapshot, sources: Set[Long],
       maxHops: Int, reverse: Boolean = false): DataFrame = {
@@ -144,44 +122,17 @@ object GraphAnalytics {
     val edges =
       if (reverse) live.edges.select(col("dst").as("es"), col("src").as("ed"))
       else live.edges.select(col("src").as("es"), col("dst").as("ed"))
-    var frontier = live.nodes.select(col("id"))
+    val sourceIds = live.nodes.select(col("id"))
       .filter(col("id").isInCollection(sources)).distinct()
-    var reached = frontier.withColumn("dist", lit(0))
-    (1 to maxHops).foreach { d =>
-      // localCheckpoint cuts the per-iteration lineage (each level is
-      // small relative to the corpus; at cluster scale checkpoint to
-      // reliable storage instead of executor-local blocks)
-      val next = frontier.join(edges, col("id") === col("es"))
+    // state: (this hop's frontier, everything reached so far)
+    Superstep.run("hopDistancesDF", spark, maxHops)(
+        (sourceIds, sourceIds.withColumn("dist", lit(0))))(
+        _.size > maxHops, _ => Nil) { case ((frontier, reached), d) =>
+      val next = Superstep.checkpoint(frontier.join(edges, col("id") === col("es"))
         .select(col("ed").as("id")).distinct()
-        .join(reached, Seq("id"), "left_anti")
-        .localCheckpoint()
-      frontier = next
-      reached = reached.unionAll(next.withColumn("dist", lit(d)))
-    }
-    reached
-  }
-
-  /** Multi-hop BFS from a source set via Pregel: minimum hop distance
-    * within `maxHops`. The n-step generalization of queryStep — each
-    * superstep is the distributed version of one chain-walk round.
-    * Prefer [[hopDistancesDF]] when `maxHops` is small.
-    */
-  def hopDistances(spark: SparkSession, g: GraphSnapshot, sources: Set[Long],
-      maxHops: Int, reverse: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val base = toGraphX(g)
-    val graph = (if (reverse) base.reverse else base)
-      .mapVertices((id, _) => if (sources.contains(id)) 0 else Int.MaxValue)
-    val res = graph.pregel(Int.MaxValue, maxIterations = maxHops)(
-      (_, dist, msg) => math.min(dist, msg),
-      triplet =>
-        if (triplet.srcAttr != Int.MaxValue && triplet.srcAttr + 1 < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (id, d) => (id, d) }
-      .toDF("id", "dist")
+        .join(reached, Seq("id"), "left_anti"))
+      (next, reached.unionAll(next.withColumn("dist", lit(d))))
+    }.last._2
   }
 
   /** Triangle count over an UNDIRECTED simple edge list `(src, dst)`
@@ -430,8 +381,8 @@ object GraphAnalytics {
     *
     * Each round is ONE job — the frontier relax join and min-groupBy,
     * with the convergence check (row count + distance sum, both
-    * monotone) riding the eager `localCheckpoint` as observed metrics
-    * (the [[kCore]] pattern: no second action per round). Rounds are
+    * monotone) observed on the round's checkpoint
+    * ([[Superstep.observed]]: no second action per round). Rounds are
     * bounded LOUDLY by `maxIters`; weight positivity is enforced from
     * an observed min on the same edge checkpoint (negative weights
     * make the undirected fixpoint a lie, so they fail fast).
@@ -467,40 +418,24 @@ object GraphAnalytics {
     val ew = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .filter(col("src") =!= col("dst"))
-    val eObs = org.apache.spark.sql.Observation()
-    val und = ew.select(col("src").as("u"), col("dst").as("v"), col("w"))
-      .unionAll(ew.select(col("dst").as("u"), col("src").as("v"), col("w")))
-      .observe(eObs, coalesce(min(col("w")), lit(1L)).as("minw"))
-      .localCheckpoint()
-    require(eObs.get("minw").asInstanceOf[Long] > 0,
-      "shortestPaths requires strictly positive weights")
-
-    def checkpointCounted(df: DataFrame): (DataFrame, Long, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs, count(lit(1)).as("n"),
-        coalesce(sum(col("d")), lit(0L)).as("s")).localCheckpoint()
-      (cp, obs.get("n").asInstanceOf[Long], obs.get("s").asInstanceOf[Long])
-    }
-
-    var (dist, n, s) = checkpointCounted(sources.toDF("s")
-      .select(col("s").as("src"), col("s").as("id"), lit(0L).as("d")))
-    var rounds = 0
-    var converged = false
-    while (!converged) {
-      require(rounds < maxIters,
-        s"shortest paths did not converge in $maxIters rounds ($n pairs reached)")
+    val (und, em) = Superstep.observed(
+      ew.select(col("src").as("u"), col("dst").as("v"), col("w"))
+        .unionAll(ew.select(col("dst").as("u"), col("src").as("v"), col("w"))),
+      coalesce(min(col("w")), lit(1L)).as("minw"))
+    require(em("minw") > 0, "shortestPaths requires strictly positive weights")
+    // distances never increase and the reached set never shrinks, so
+    // (count, sum) unchanged <=> the whole state is unchanged
+    val metrics = Seq(count(lit(1)).as("n"), coalesce(sum(col("d")), lit(0L)).as("s"))
+    val states = Superstep.run("multiSourceDistances", spark, maxIters, Seq(und))(
+        Superstep.observed(sources.toDF("s")
+          .select(col("s").as("src"), col("s").as("id"), lit(0L).as("d")), metrics: _*))(
+        ss => ss.size > 1 && ss.last._2 == ss(ss.size - 2)._2, st => Seq(st._1)) { case ((dist, _), _) =>
       val relax = dist.join(und, dist("id") === und("u"))
         .select(dist("src"), und("v").as("id"), (dist("d") + und("w")).as("d"))
-      val (next, nNext, sNext) = checkpointCounted(
-        dist.unionAll(relax).groupBy(col("src"), col("id")).agg(min(col("d")).as("d")))
-      rounds += 1
-      // distances never increase and the reached set never shrinks,
-      // so (count, sum) unchanged <=> the whole state is unchanged
-      converged = nNext == n && sNext == s
-      freeCheckpoint(dist) // superseded round: release its blocks
-      dist = next; n = nNext; s = sNext
+      Superstep.observed(dist.unionAll(relax).groupBy(col("src"), col("id")).agg(min(col("d")).as("d")),
+        metrics: _*)
     }
-    (dist.select(col("src"), col("id"), col("d").cast("long").as("dist")), rounds)
+    (states.last._1.select(col("src"), col("id"), col("d").cast("long").as("dist")), states.size - 1)
   }
 
   /** Landmark harmonic centrality (Boldi & Vigna '14 form, over the
@@ -566,20 +501,18 @@ object GraphAnalytics {
     */
   def featurePropagation(edges: DataFrame, feats: DataFrame, hops: Int): DataFrame = {
     require(hops >= 1, "featurePropagation needs at least one hop")
-    val e = canonicalEdges(edges).localCheckpoint()
+    val e = Superstep.checkpoint(canonicalEdges(edges))
     val ed = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
     val nodes = ed.select(col("u").as("id")).distinct()
-    val al = ed.unionAll(nodes.select(col("id").as("u"), col("id").as("v")))
-      .localCheckpoint()
-    val f0 = nodes.join(feats.select(col("id"), col("f").cast("long").as("f")),
-        Seq("id"), "left")
+    val al = Superstep.checkpoint(ed.unionAll(nodes.select(col("id").as("u"), col("id").as("v"))))
+    val f0 = nodes.join(feats.select(col("id"), col("f").cast("long").as("f")), Seq("id"), "left")
       .select(col("id"), coalesce(col("f"), lit(0L)).as("f"))
-      .localCheckpoint()
-    val frames = Iterator.iterate(f0) { cur =>
-      al.join(cur, al("v") === cur("id"))
-        .groupBy(al("u").as("id")).agg(sum(cur("f")).as("f"))
-        .localCheckpoint()
-    }.take(hops + 1).toSeq
+    // every hop is kept: the result joins them all
+    val frames = Superstep.run("featurePropagation", e.sparkSession, hops, Seq(e, al))(
+        Superstep.checkpoint(f0))(_.size > hops, _ => Nil) { (cur, _) =>
+      Superstep.checkpoint(al.join(cur, al("v") === cur("id"))
+        .groupBy(al("u").as("id")).agg(sum(cur("f")).as("f")))
+    }
     frames.zipWithIndex.map { case (df, h) =>
       df.select(col("id"), col("f").as(s"f$h"))
     }.reduce((a, b) => a.join(b, Seq("id")))
@@ -602,55 +535,50 @@ object GraphAnalytics {
     * aggregation + two anti-joins over a monotonically SHRINKING
     * active set (every round kills at least the globally minimal
     * active vertex); the active count rides each round's checkpoint
-    * as an observed metric ([[kCore]] pattern, no second action).
+    * as an observed metric ([[Superstep.observed]], no second action).
     *
     * Vertex set = edge endpoints (isolated vertices are trivially
     * independent and not represented in an edge list). Returns
     * (MIS member ids, rounds).
     */
   def maximalIndependentSet(edges: DataFrame, maxIters: Int = 40): (DataFrame, Int) = {
-    val e = canonicalEdges(edges).localCheckpoint()
-    val ed = e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).localCheckpoint()
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = Superstep.checkpoint(canonicalEdges(edges))
+    val ed = Superstep.checkpoint(e.unionAll(e.select(col("v").as("u"), col("u").as("v"))))
 
-    def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs, count(lit(1)).as("n"),
-        coalesce(max(col("id")), lit(0L)).as("mx")).localCheckpoint()
-      val mx = obs.get("mx").asInstanceOf[Long]
-      require(mx < (1L << 31), s"MIS priorities need ids < 2^31, saw $mx")
-      (cp, obs.get("n").asInstanceOf[Long])
+    def active(df: DataFrame): (DataFrame, Long) = {
+      val (cp, m) = Superstep.observed(df, count(lit(1)).as("n"),
+        coalesce(max(col("id")), lit(0L)).as("mx"))
+      require(m("mx") < (1L << 31), s"MIS priorities need ids < 2^31, saw ${m("mx")}")
+      (cp, m("n"))
     }
 
-    var (active, n) = checkpointCounted(
-      ed.select(col("u").cast("long").as("id")).distinct())
-    var misParts = List.empty[DataFrame]
-    var rounds = 0
-    while (n > 0) {
-      require(rounds < maxIters, s"MIS did not converge in $maxIters rounds ($n active)")
-      val pri = active.select(col("id"),
-        (graft.pipeline.TextOps.hash32(rounds, col("id").cast("string")) * lit(2147483648L)
+    // state: (active set, its size, the round's winners — kept, the
+    // result is their union)
+    val states = Superstep.run("maximalIndependentSet", spark, maxIters, Seq(e, ed)) {
+        val (all, n) = active(ed.select(col("u").cast("long").as("id")).distinct())
+        (all, n, Option.empty[DataFrame])
+      }(_.last._2 == 0, st => Seq(st._1)) { case ((act, _, _), round) =>
+      val pri = act.select(col("id"),
+        (graft.pipeline.TextOps.hash32(round - 1, col("id").cast("string")) * lit(2147483648L)
           + col("id")).as("p"))
       val nmin = ed
         .join(pri.select(col("id").as("u")), Seq("u"), "left_semi")
         .join(pri.select(col("id").as("v"), col("p").as("pv")), Seq("v"))
         .groupBy(col("u").as("id")).agg(min(col("pv")).as("mp"))
-      val cand = pri.join(nmin, Seq("id"), "left")
+      val cand = Superstep.checkpoint(pri.join(nmin, Seq("id"), "left")
         .filter(col("mp").isNull || col("p") < col("mp"))
-        .select(col("id")).localCheckpoint()
-      misParts ::= cand
+        .select(col("id")))
       val kill = cand.unionAll(
         ed.join(cand.select(col("id").as("u")), Seq("u"), "left_semi")
           .select(col("v").as("id"))).distinct()
-      val (next, nNext) = checkpointCounted(active.join(kill, Seq("id"), "left_anti"))
-      rounds += 1
-      freeCheckpoint(active) // superseded round (cand frames are kept separately)
-      active = next; n = nNext
+      val (next, n) = active(act.join(kill, Seq("id"), "left_anti"))
+      (next, n, Some(cand))
     }
-    val mis = misParts.reverse match {
-      case Nil => active.limit(0)
-      case h :: t => t.foldLeft(h)(_ unionAll _)
-    }
-    (mis, rounds)
+    Superstep.free(states.last._1) // the last active set is empty
+    val mis = states.flatMap(_._3).reduceOption(_ unionAll _).getOrElse(Seq.empty[Long].toDF("id"))
+    (mis, states.size - 1)
   }
 
   /** Release the cached blocks behind an eager `localCheckpoint` once
@@ -704,9 +632,8 @@ object GraphAnalytics {
     * subtracts, from the (id, degree) frame, the edges the peeled
     * vertices take with them — a scan of `e0` in both orientations,
     * semi-joined to the peel set before its groupBy — so per-round
-    * shuffle volume tracks the frontier, not |E|. `localCheckpoint`
-    * cuts the per-round lineage (the [[hopDistancesDF]] contract), and
-    * the below-k count rides that checkpoint as an observed metric, so
+    * shuffle volume tracks the frontier, not |E|. Each round is one
+    * [[Superstep]] checkpoint with the below-k count observed on it, so
     * a round is one job. Real graphs converge in a handful of rounds
     * because whole low-degree fringes peel at once. `maxIters` bounds
     * the loop LOUDLY through `require` (an IllegalArgumentException,
@@ -720,34 +647,13 @@ object GraphAnalytics {
     */
   def kCore(edges: DataFrame, k: Int, maxIters: Int = 30): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // edge frames checkpoint MEMORY_AND_DISK (r16 optimization): the
-    // |E| frame is re-scanned TWICE per peel round, and DISK_ONLY made
-    // every scan pay deserialization + decompression — measured 9-16 s
-    // of executor time per round at sf0.1 against a 4M-row frame.
-    // MEMORY_AND_DISK is the scale-adaptive level: it serves scans
-    // from deserialized memory while the frame fits and degrades to
-    // exactly the old disk behavior when it does not (the unified
-    // memory manager evicts cached blocks under execution pressure, so
-    // the aggregation hash maps still win when RAM is short).
-    val edgeLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // each round is ONE job: the convergence metric rides the eager
-    // localCheckpoint as an observed metric (CollectMetrics) instead
-    // of a second count() action over the checkpointed partitions
-    def checkpointObserved(df: DataFrame, metric: org.apache.spark.sql.Column,
-        level: org.apache.spark.storage.StorageLevel =
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df.observe(obs, metric.as("m")).localCheckpoint(true, level)
-      val m = obs.get("m")
-      (cp, if (m == null) 0L else m.asInstanceOf[Long])
-    }
-    val (e0, nE0) = checkpointObserved(
+    val (e0, em) = Superstep.observed(
       edges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
         .distinct(),
-      count(lit(1)), edgeLevel)
-    if (nE0 == 0)
+      count(lit(1)).as("n"))
+    if (em("n") == 0)
       return (e0.select(col("u").as("id"), lit(0L).as("degree")).limit(0), 0)
     // FRONTIER-INCREMENTAL peel: the full |E| degree aggregation runs
     // exactly ONCE; every later round maintains the (id, degree)
@@ -761,15 +667,13 @@ object GraphAnalytics {
     // x never has), so round losses come straight off the immutable
     // e0 — one cached narrow scan with a broadcast peel filter, no
     // per-round |E| shuffle or checkpoint.
-    val belowK = sum(when(col("degree") < k, 1L).otherwise(0L))
-    var (degs, nBelow) = checkpointObserved(
-      e0.select(explode(array(col("u"), col("v"))).as("id"))
-        .groupBy(col("id")).agg(count(lit(1)).as("degree")),
-      belowK)
-    var peels = 0
-    while (nBelow > 0) {
-      require(peels + 1 < maxIters,
-        s"k-core did not converge in $maxIters rounds ($nBelow vertices below k)")
+    val belowK = sum(when(col("degree") < k, 1L).otherwise(0L)).as("below")
+    // the returned rounds count the final no-op round too, so at most
+    // maxIters - 1 of them peel
+    val states = Superstep.run("kCore", e0.sparkSession, maxIters - 1, Seq(e0))(
+        Superstep.observed(e0.select(explode(array(col("u"), col("v"))).as("id"))
+          .groupBy(col("id")).agg(count(lit(1)).as("degree")), belowK))(
+        _.last._2("below") == 0, st => Seq(st._1)) { case ((degs, _), _) =>
       val peel = degs.filter(col("degree") < k).select(col("id"))
       // survivors' degree losses: endpoints whose OTHER end peels
       // this round. The peel-set semi-join filters BEFORE the
@@ -781,7 +685,7 @@ object GraphAnalytics {
         .join(peel.withColumnRenamed("id", "other"), Seq("other"), "left_semi")
         .join(peel, Seq("id"), "left_anti")
         .groupBy(col("id")).agg(count(lit(1)).as("__loss"))
-      val (nextDegs, nb) = checkpointObserved(
+      Superstep.observed(
         degs.join(peel, Seq("id"), "left_anti")
           .join(losses, Seq("id"), "left")
           .select(col("id"),
@@ -791,17 +695,10 @@ object GraphAnalytics {
           // would bill a spurious extra round to peel a degree-0 row
           .filter(col("degree") > 0),
         belowK)
-      // successor materialized — release the superseded round (bench
-      // reps otherwise stack every round's blocks in the block manager)
-      freeCheckpoint(degs)
-      degs = nextDegs
-      nBelow = nb
-      peels += 1
     }
-    freeCheckpoint(e0) // the core is read off `degs`; the edges are done
     // rounds counts like the oracle unrolls: every effective peel
     // plus the final no-op round that PROVES the fixpoint
-    (degs.select(col("id"), col("degree")), peels + 1)
+    (states.last._1.select(col("id"), col("degree")), states.size)
   }
 
   /** Synchronous label propagation (Raghavan et al. '07 — public
@@ -824,14 +721,13 @@ object GraphAnalytics {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
+    val und = Superstep.checkpoint(edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    var labels = und.select(col("a").as("id")).distinct()
-      .withColumn("lab", col("id")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+      .distinct())
+    Superstep.run("labelPropagation", und.sparkSession, rounds, Seq(und))(
+        Superstep.checkpoint(und.select(col("a").as("id")).distinct().withColumn("lab", col("id"))))(
+        _.size > rounds, Seq(_)) { (labels, _) =>
       // argmax as an aggregation, not a window (r16 optimization):
       // max(struct(c, -lab)) is lexicographic — largest count, ties to
       // the SMALLEST label (negation flips the order) — identical to
@@ -844,13 +740,9 @@ object GraphAnalytics {
         .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c"))
         .groupBy(col("a")).agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
         .select(col("a").as("id"), (-col("m.nl")).as("nl"))
-      val next = labels.join(winners, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nl"), col("lab")).as("lab"))
-        .localCheckpoint()
-      freeCheckpoint(labels) // superseded round: release its blocks
-      labels = next
-    }
-    labels
+      Superstep.checkpoint(labels.join(winners, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nl"), col("lab")).as("lab")))
+    }.last
   }
 
   /** Personalized PageRank in EXACT integer fixed-point: scores are
@@ -872,35 +764,13 @@ object GraphAnalytics {
     */
   def personalizedPageRank(edges: DataFrame, seed: Long, rounds: Int,
       dampingPermille: Int = 850): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(dampingPermille > 0 && dampingPermille < 1000,
-      s"dampingPermille must be in (0, 1000), got $dampingPermille")
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
+    requirePageRankArgs(rounds, dampingPermille)
+    val und = Superstep.checkpoint(edges.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = und.select(col("u").as("id")).distinct().localCheckpoint()
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val restart = (1000L - dampingPermille) * 1000L
-    var r = nodes.withColumn("ppr",
-      when(col("id") === seed, lit(1000000L)).otherwise(lit(0L))).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val contrib = und
-        .join(r.filter(col("ppr") > 0).toDF("u", "ppr"), Seq("u"))
-        .join(deg, Seq("u"))
-        .select(col("v").as("id"),
-          floor(col("ppr") * dampingPermille / (col("deg") * 1000)).cast("long").as("m"))
-        .groupBy(col("id")).agg(sum(col("m")).as("m"))
-      val next = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (when(col("id") === seed, lit(restart)).otherwise(lit(0L))
-            + coalesce(col("m"), lit(0L))).as("ppr"))
-        .localCheckpoint()
-      freeCheckpoint(r) // superseded round: release its blocks
-      r = next
-    }
-    r.filter(col("ppr") > 0).select(col("id"), col("ppr").as("ppr_micro"))
+      .distinct())
+    pageRankRounds("personalizedPageRank", und, und.groupBy("u").agg(count(lit(1)).as("deg")),
+      floor(col("ppr") * dampingPermille / (col("deg") * 1000)), seed, rounds, dampingPermille)
   }
 
   /** WEIGHTED personalized PageRank — [[personalizedPageRank]] with
@@ -915,38 +785,46 @@ object GraphAnalytics {
     */
   def personalizedPageRankWeighted(edges: DataFrame, seed: Long, rounds: Int,
       dampingPermille: Int = 850): DataFrame = {
+    requirePageRankArgs(rounds, dampingPermille)
+    val (und, m) = Superstep.observed(
+      edges.select(col("src").as("u"), col("dst").as("v"), col("w").cast("long").as("w"))
+        .unionAll(edges.select(col("dst").as("u"), col("src").as("v"), col("w").cast("long").as("w")))
+        .filter(col("u") =!= col("v")),
+      coalesce(min(col("w")), lit(1L)).as("minw"))
+    require(m("minw") > 0, "weighted PPR requires strictly positive weights")
+    pageRankRounds("personalizedPageRankWeighted", und, und.groupBy("u").agg(sum(col("w")).as("ws")),
+      floor(col("ppr") * dampingPermille * col("w") / (col("ws") * 1000)), seed, rounds, dampingPermille)
+  }
+
+  private def requirePageRankArgs(rounds: Int, dampingPermille: Int): Unit = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(dampingPermille > 0 && dampingPermille < 1000,
       s"dampingPermille must be in (0, 1000), got $dampingPermille")
-    val wObs = org.apache.spark.sql.Observation()
-    val und = edges.select(col("src").as("u"), col("dst").as("v"), col("w").cast("long").as("w"))
-      .unionAll(edges.select(col("dst").as("u"), col("src").as("v"), col("w").cast("long").as("w")))
-      .filter(col("u") =!= col("v"))
-      .observe(wObs, coalesce(min(col("w")), lit(1L)).as("minw"))
-      .localCheckpoint()
-    require(wObs.get("minw").asInstanceOf[Long] > 0,
-      "weighted PPR requires strictly positive weights")
-    val nodes = und.select(col("u").as("id")).distinct().localCheckpoint()
-    val strength = und.groupBy("u").agg(sum(col("w")).as("ws"))
+  }
+
+  /** The round loop both PPR forms share over the checkpointed
+    * undirected edges `und(u, v, ...)`: each nonzero score sends
+    * `share` (over `und`, the score `ppr` and the per-`u` frame
+    * `perSource`) along its edges, summed by destination.
+    */
+  private def pageRankRounds(op: String, und: DataFrame, perSource: DataFrame, share: Column,
+      seed: Long, rounds: Int, dampingPermille: Int): DataFrame = {
+    val nodes = Superstep.checkpoint(und.select(col("u").as("id")).distinct())
     val restart = (1000L - dampingPermille) * 1000L
-    var r = nodes.withColumn("ppr",
-      when(col("id") === seed, lit(1000000L)).otherwise(lit(0L))).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Superstep.run(op, und.sparkSession, rounds, Seq(und, nodes))(
+        Superstep.checkpoint(nodes.withColumn("ppr",
+          when(col("id") === seed, lit(1000000L)).otherwise(lit(0L)))))(
+        _.size > rounds, Seq(_)) { (r, _) =>
       val contrib = und
         .join(r.filter(col("ppr") > 0).toDF("u", "ppr"), Seq("u"))
-        .join(strength, Seq("u"))
-        .select(col("v").as("id"),
-          floor(col("ppr") * dampingPermille * col("w") / (col("ws") * 1000)).cast("long").as("m"))
+        .join(perSource, Seq("u"))
+        .select(col("v").as("id"), share.cast("long").as("m"))
         .groupBy(col("id")).agg(sum(col("m")).as("m"))
-      val next = nodes.join(contrib, Seq("id"), "left")
+      Superstep.checkpoint(nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (when(col("id") === seed, lit(restart)).otherwise(lit(0L))
-            + coalesce(col("m"), lit(0L))).as("ppr"))
-        .localCheckpoint()
-      freeCheckpoint(r) // superseded round: release its blocks
-      r = next
-    }
-    r.filter(col("ppr") > 0).select(col("id"), col("ppr").as("ppr_micro"))
+            + coalesce(col("m"), lit(0L))).as("ppr")))
+    }.last.filter(col("ppr") > 0).select(col("id"), col("ppr").as("ppr_micro"))
   }
 
   /** HyperANF (Boldi, Rosa & Vigna, WWW'11 — public knowledge):
@@ -976,16 +854,13 @@ object GraphAnalytics {
     require(b >= 4 && b <= 16, s"HLL precision b=$b outside [4,16]")
     val rest = 32 - b
     val m = 1 << b
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
+    val und = Superstep.checkpoint(edges.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      .filter(col("u") =!= col("v")).distinct())
     val nodes = und.select(col("u").as("id")).distinct()
     val h = graft.pipeline.TextOps.hash32(0, col("id").cast("string"))
     val w = h % (1L << rest)
     val rank = (lit(rest + 1) - length(ltrim(bin(w), "0"))).cast("long")
-    var regs = nodes.select(col("id"),
-      shiftright(h, rest).cast("long").as("bucket"), rank.as("max_rank"))
-      .localCheckpoint()
 
     def est(r: DataFrame, t: Int): DataFrame = {
       val raw = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(m)) * m * m /
@@ -999,16 +874,16 @@ object GraphAnalytics {
               .otherwise(raw), 6) * 1000000, 0).cast("long").as("ball_est_micro"))
     }
 
-    var out = est(regs, 0)
-    for (t <- 1 to rounds) {
-      regs = regs.unionAll(
+    // every round's registers are kept: the result estimates them all
+    Superstep.run("hyperANF", und.sparkSession, rounds, Seq(und))(
+        Superstep.checkpoint(nodes.select(col("id"),
+          shiftright(h, rest).cast("long").as("bucket"), rank.as("max_rank"))))(
+        _.size > rounds, _ => Nil) { (regs, _) =>
+      Superstep.checkpoint(regs.unionAll(
           und.join(regs.select(col("id").as("u"), col("bucket"), col("max_rank")), Seq("u"))
             .select(col("v").as("id"), col("bucket"), col("max_rank")))
-        .groupBy(col("id"), col("bucket")).agg(max(col("max_rank")).as("max_rank"))
-        .localCheckpoint()
-      out = out.unionAll(est(regs, t))
-    }
-    out
+        .groupBy(col("id"), col("bucket")).agg(max(col("max_rank")).as("max_rank")))
+    }.zipWithIndex.map { case (regs, t) => est(regs, t) }.reduce(_ unionAll _)
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM '99 — public
@@ -1034,41 +909,33 @@ object GraphAnalytics {
     */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
+    val e = Superstep.checkpoint(edges.select(col("src"), col("dst")).distinct())
+    val nodes = Superstep.checkpoint(e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint()
+      .distinct())
 
-    def normalized(raw: DataFrame, out: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val pinned = raw.observe(obs, coalesce(max(col("raw")), lit(0L)).as("maxraw"))
-        .localCheckpoint(true)
-      require(obs.get("maxraw").asInstanceOf[Long] <= 9200000000000L,
+    // (scores, the pinned raw frame they read)
+    def normalized(raw: DataFrame, out: String): (DataFrame, DataFrame) = {
+      val (pinned, m) = Superstep.observed(raw, coalesce(max(col("raw")), lit(0L)).as("maxraw"))
+      require(m("maxraw") <= 9200000000000L,
         "HITS raw score too large to renormalize in BIGINT — rescale first")
       val tot = pinned.agg(sum(col("raw")).as("__tot"))
-      pinned.crossJoin(broadcast(tot))
-        .select(col("id"), expr("(raw * 1000000) DIV __tot").as(out))
+      (pinned.crossJoin(broadcast(tot))
+        .select(col("id"), expr("(raw * 1000000) DIV __tot").as(out)), pinned)
     }
 
-    var h = nodes.withColumn("h", lit(1000000L))
-    var a = nodes.limit(0).withColumn("a", lit(0L))
-    // half-round job descriptions: driver-side metadata only (no plan
-    // or execution change) — lets a SparkListener attribute each
-    // stage's wall/GC to its half-round (graft.ProbeHits, the r16
-    // stage-evidence instrument for the q_graph_hits watch line)
-    val sc = e.sparkSession.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    for (r <- 1 to rounds) {
-      sc.setJobDescription(s"hits:r$r:auth")
-      a = normalized(
+    // state: (hubs, authorities, the round's pinned frames)
+    val (h, a, _) = Superstep.run("hits", e.sparkSession, rounds, Seq(e))(
+        (nodes.withColumn("h", lit(1000000L)), nodes.limit(0).withColumn("a", lit(0L)),
+          Seq.empty[DataFrame]))(_.size > rounds, _._3) { case ((h, _, _), _) =>
+      val (a, aPinned) = normalized(
         e.join(h.select(col("id").as("src"), col("h")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(sum(col("h")).as("raw")), "a")
-      sc.setJobDescription(s"hits:r$r:hub")
-      h = normalized(
+      val (hNext, hPinned) = normalized(
         e.join(a.select(col("id").as("dst"), col("a")), Seq("dst"))
           .groupBy(col("src").as("id")).agg(sum(col("a")).as("raw")), "h")
-    }
-    sc.setJobDescription(prevDesc)
+      (hNext, a, Seq(aPinned, hPinned))
+    }.last
     nodes.join(h, Seq("id"), "left").join(a, Seq("id"), "left")
       .select(col("id"), coalesce(col("h"), lit(0L)).as("hub_micro"),
         coalesce(col("a"), lit(0L)).as("auth_micro"))
@@ -1091,15 +958,14 @@ object GraphAnalytics {
     */
   def deterministicWalks(edges: DataFrame, walkLen: Int): DataFrame = {
     require(walkLen >= 1, s"walkLen must be >= 1, got $walkLen")
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
+    val und = Superstep.checkpoint(edges.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    var cur = und.select(col("u").as("start")).distinct()
-      .withColumn("cur", col("start")).localCheckpoint()
-    var out = cur.select(col("start"), lit(0L).as("step"), col("cur").as("node"))
-    for (t <- 1 to walkLen) {
+      .distinct())
+    // every step is kept: the result is the walk corpus
+    Superstep.run("deterministicWalks", und.sparkSession, walkLen, Seq(und))(
+        Superstep.checkpoint(und.select(col("u").as("start")).distinct()
+          .withColumn("cur", col("start"))))(_.size > walkLen, _ => Nil) { (cur, t) =>
       val cand = und.join(cur.toDF("start", "u"), Seq("u"))
         .select(col("start"), col("v"),
           graft.pipeline.TextOps.hash32(t,
@@ -1109,12 +975,11 @@ object GraphAnalytics {
       // smallest neighbor id — identical to the old row_number() OVER
       // (ORDER BY h, v) = 1, with map-side partial aggregation instead
       // of a per-step partitioned sort.
-      cur = cand.groupBy(col("start")).agg(min(struct(col("h"), col("v"))).as("m"))
-        .select(col("start"), col("m.v").as("cur")).localCheckpoint()
-      out = out.unionAll(cur.select(col("start"), lit(t.toLong).as("step"),
-        col("cur").as("node")))
-    }
-    out
+      Superstep.checkpoint(cand.groupBy(col("start")).agg(min(struct(col("h"), col("v"))).as("m"))
+        .select(col("start"), col("m.v").as("cur")))
+    }.zipWithIndex.map { case (cur, t) =>
+      cur.select(col("start"), lit(t.toLong).as("step"), col("cur").as("node"))
+    }.reduce(_ unionAll _)
   }
 
   /** Skip-gram training pairs from a walk corpus: every

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.analytics.Superstep
 
 /** HashMin label propagation over an arbitrary undirected edge list —
-  * the shared core of [[graft.analytics.GraphAnalytics.connectedComponentsDF]]
-  * (snapshot graphs) and [[graft.pipeline.Dedup.clusterPairs]]
+  * the distributed path of [[graft.pipeline.Dedup.clusterPairs]]
   * (near-duplicate clustering): every round each node takes the
   * minimum label among itself and its neighbors; converged when a
   * round changes nothing.
@@ -14,105 +14,36 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: O(diameter) rounds of two shuffles each (join +
   * groupBy), all on hash-uniform ids. Near-dup graphs have tiny
   * diameters (clusters are quasi-cliques), so this converges in 2-3
-  * rounds at any corpus size; for deep graphs bound `maxIters` and
-  * prefer the GraphX form.
-  *
-  * Execution harnessing: each round is exactly ONE job — the frame is
-  * persisted (explicit MEMORY_AND_DISK, spill-not-evict) and the
-  * convergence count comes from the same aggregation that materializes
-  * it, not a second `isEmpty` pass. Superseded rounds are unpersisted
-  * eagerly, so repeated invocations (bench reps, long sessions) do not
-  * accumulate executor blocks — the accumulation was measured as the
-  * dominant run-to-run variance of the clustering bench line.
+  * rounds at any corpus size; `maxIters` bounds deep graphs loudly.
+  * Each round is one [[Superstep]] checkpoint with the change count
+  * observed on it; superseded rounds are released as the loop goes.
   */
 object Components {
-
-  /** Rounds taken by the most recent [[minLabel]] call in this JVM.
-    * SINGLE-THREADED BENCH TELEMETRY ONLY: a JVM-global last-writer-
-    * wins cell — concurrent component computations overwrite each
-    * other here. Anything that needs the count reliably (parallel
-    * sessions, tests) should use [[minLabelManaged]], which returns
-    * the rounds alongside the result instead of through this global.
-    */
-  @volatile var lastRounds: Int = 0
-
-  /** Components plus the run's metadata: `rounds` to convergence and
-    * a `release` thunk that unpersists the final round's cached
-    * blocks. Call `release()` once the result (or anything derived
-    * from it) has been materialized — afterwards the frame is still
-    * valid, it just recomputes through lineage if re-read.
-    */
-  final case class Result(components: DataFrame, rounds: Int, release: () => Unit)
-
-  /** Final-round frames from [[minLabel]] calls whose caller has no
-    * release handle. Swept (unpersisted) at the START of the next
-    * invocation: cached entries then never accumulate beyond the one
-    * live invocation, which bench reps measured as the dominant
-    * run-to-run variance. Sweeping a frame a concurrent caller is
-    * still reading is CORRECT (Spark recomputes lost blocks through
-    * lineage) — at worst that caller pays a recompute.
-    */
-  private val unreleased = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  private def sweep(): Unit = {
-    var f = unreleased.poll()
-    while (f != null) { f(); f = unreleased.poll() }
-  }
 
   /** `nodes`: single column `id`. `edges`: columns `u`, `v` (each
     * undirected pair in either or both orientations). Returns
     * (id, component) with component = the minimum id reachable from
-    * `id` (isolated nodes map to themselves).
-    *
-    * The final round stays cached so the caller's first
-    * materialization does not redo the loop; the NEXT invocation in
-    * this JVM sweeps it. For deterministic release (long sessions,
-    * concurrent callers) use [[minLabelManaged]].
+    * `id` (isolated nodes map to themselves). The final round stays
+    * checkpointed behind the result.
     */
   def minLabel(nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val r = minLabelManaged(nodes, edges, maxIters)
-    unreleased.add(r.release)
-    r.components
-  }
-
-  /** [[minLabel]] with caller-driven cache release and a race-free
-    * rounds count (closes the two lifecycle gaps of the bare form).
-    */
-  def minLabelManaged(nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): Result = {
-    sweep()
-    // symmetrize once; persisted because every round re-reads it
     val nbrs = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var comp = nodes.select(col("id"), col("id").as("component"))
-    var persisted: DataFrame = null // the cached frame backing `comp`
-    var round = 0
-    var done  = false
-    while (!done && round < maxIters) {
+    // state: (round frame with its `changed` flags, the number changed)
+    Superstep.run("minLabel", edges.sparkSession, maxIters)(
+        (nodes.select(col("id"), col("id").as("component")), -1L))(
+        _.last._2 == 0, st => Seq(st._1)) { case ((cur, _), _) =>
+      val comp = cur.select(col("id"), col("component"))
       val nbrMin = nbrs
         .join(comp.select(col("id").as("v"), col("component").as("vc")), Seq("v"))
         .groupBy(col("u")).agg(min(col("vc")).as("nc"))
-      val next = comp
+      val (next, m) = Superstep.observed(comp
         .join(nbrMin.withColumnRenamed("u", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nc"), col("component"))).as("component"),
-          (coalesce(col("nc"), col("component")) < col("component")).as("changed"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // one job: builds the round's cached blocks AND counts changes
-      val changed = next.agg(count(when(col("changed"), lit(1))).as("c")).head().getLong(0)
-      if (persisted != null) persisted.unpersist(blocking = false)
-      persisted = next
-      comp = next.select("id", "component")
-      done = changed == 0L
-      round += 1
-    }
-    lastRounds = round
-    // the final round's blocks stay cached for the caller; the
-    // symmetrized edges are no longer needed (a lost final block
-    // recomputes through lineage — standard fault story)
-    nbrs.unpersist(blocking = false)
-    val last = persisted
-    Result(comp, round,
-      () => if (last != null) last.unpersist(blocking = false): Unit)
+          (coalesce(col("nc"), col("component")) < col("component")).as("changed")),
+        count(when(col("changed"), lit(1))).as("n_changed"))
+      (next, m("n_changed"))
+    }.last._1.select(col("id"), col("component"))
   }
 }

@@ -36,36 +36,41 @@ object AnalyticsQueries extends QueryModule {
     * gate builds it once per invocation.
     */
   private def sharedPartsEdges(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+      dir: String): org.apache.spark.sql.DataFrame =
+    withCustomerParts(s, dir)(cp => cp.as("a")
+      .join(cp.as("b"), col("a.p") === col("b.p") && col("a.c") < col("b.c"))
+      .groupBy(col("a.c"), col("b.c")).agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= 4)
+      .select(col("a.c").as("src"), col("b.c").as("dst"))
+      .localCheckpoint())
+
+  /** Lends `use` the distinct (customer c, part p) purchases,
+    * checkpointed and released once `use` returns: `use` must
+    * materialize whatever it builds from them.
+    *
+    * lineitem is spread before the join (r16 optimization): the
+    * single-row-group test layout caps the scan-join stage at ~1 task;
+    * spread is a no-op on any multi-split production layout. The
+    * checkpoint is then PINNED to machine width by the part key (r16,
+    * guide §2.5): the (c, p) frame is a few MB after distinct, so AQE
+    * coalesces the exchange feeding the pair-generation self-join to
+    * ~10 tasks while that stage amplifies rows quadratically per part
+    * (measured 7.6 s executor on 10 tasks). The pinned exchange is
+    * reused by BOTH sides of the self-join; no-op at production widths
+    * (widenPinned contract). The release matters for bench reps, which
+    * otherwise stack a few MB per rep in the block manager.
+    */
+  private def withCustomerParts[A](s: org.apache.spark.sql.SparkSession, dir: String)(
+      use: org.apache.spark.sql.DataFrame => A): A = {
     val t = Tables(s, dir)
-    // lineitem is spread before the join (r16 optimization): the
-    // single-row-group test layout caps the scan-join stage at ~1
-    // task; spread is a no-op on any multi-split production layout
-    // cp is checkpointed then PINNED to machine width by the join key
-    // (r16, guide §2.5): the (c, p) frame is a few MB after distinct,
-    // so AQE coalesces the exchange feeding the pair-generation
-    // self-join to ~10 tasks while that stage amplifies rows
-    // quadratically per part (measured 7.6 s executor on 10 tasks).
-    // The pinned exchange is reused by BOTH sides of the self-join;
-    // no-op at production widths (widenPinned contract).
     val cp0 = t.orders.join(
         graft.pipeline.TextOps.spread(
           t.lineitem.select(col("l_orderkey"), col("l_partkey")), col("l_orderkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p")).distinct()
       .localCheckpoint(true)
-    val cp = GraphAnalytics.widenPinned(cp0, col("p"))
-    val out = cp.as("a")
-      .join(cp.as("b"), col("a.p") === col("b.p") && col("a.c") < col("b.c"))
-      .groupBy(col("a.c"), col("b.c")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= 4)
-      .select(col("a.c").as("src"), col("b.c").as("dst"))
-      .localCheckpoint()
-    // the edge checkpoint above is the only consumer — release cp's
-    // blocks immediately (bench reps otherwise stack a few MB per rep
-    // in the block manager, pressuring every cached frame downstream)
-    GraphAnalytics.freeCheckpoint(cp0)
-    out
+    try use(GraphAnalytics.widenPinned(cp0, col("p")))
+    finally GraphAnalytics.freeCheckpoint(cp0)
   }
 
   /** SQL twin of [[sharedPartsEdges]]: `te` (u < v), its undirected
@@ -84,27 +89,14 @@ object AnalyticsQueries extends QueryModule {
     * the inverse-tie-strength routing weight the SSSP gate traverses.
     */
   private def sharedPartsWeighted(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val t = Tables(s, dir)
-    // checkpoint + pinned width before the pair-generation self-join —
-    // the [[sharedPartsEdges]] rationale verbatim (incl. the release)
-    val cp0 = t.orders.join(
-        graft.pipeline.TextOps.spread(
-          t.lineitem.select(col("l_orderkey"), col("l_partkey")), col("l_orderkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p")).distinct()
-      .localCheckpoint(true)
-    val cp = GraphAnalytics.widenPinned(cp0, col("p"))
-    val out = cp.as("a")
+      dir: String): org.apache.spark.sql.DataFrame =
+    withCustomerParts(s, dir)(cp => cp.as("a")
       .join(cp.as("b"), col("a.p") === col("b.p") && col("a.c") < col("b.c"))
       .groupBy(col("a.c"), col("b.c")).agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= 4)
       .select(col("a.c").as("src"), col("b.c").as("dst"),
         greatest(lit(1L), lit(11L) - least(lit(10L), col("shared"))).as("w"))
-      .localCheckpoint()
-    GraphAnalytics.freeCheckpoint(cp0)
-    out
-  }
+      .localCheckpoint())
 
   /** SQL twin of [[sharedPartsWeighted]]: `tew(u, v, w)` and its
     * undirected expansion `edw`.
@@ -167,9 +159,7 @@ object AnalyticsQueries extends QueryModule {
     // Component label = min vertex id = 1e9 + min custkey in the
     // region (customers own the smallest id space). Uses the GraphX
     // form: repeated analytics over one snapshot ride the memoized
-    // cached graph (toGraphX), which beats the per-call input rescan
-    // of the DataFrame HashMin alternative (connectedComponentsDF,
-    // equivalence spec-pinned) once the graph is warm.
+    // cached graph (toGraphX).
     QueryDef(
       "q_cc_components",
       "connected components of the geography subgraph (one per region)",
@@ -558,17 +548,7 @@ object AnalyticsQueries extends QueryModule {
     QueryDef(
       "q_kcore",
       "500-core of the customer co-purchase graph: surviving customers + core degree",
-      (s, dir) => {
-        val t = Tables(s, dir)
-        // checkpoint + pinned width before the pair-generation
-        // self-join — the sharedPartsEdges rationale verbatim
-        val cp0 = t.orders.join(
-            graft.pipeline.TextOps.spread(
-              t.lineitem.select(col("l_orderkey"), col("l_partkey")), col("l_orderkey")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_partkey").as("p")).distinct()
-          .localCheckpoint(true)
-        val cp = GraphAnalytics.widenPinned(cp0, col("p"))
+      (s, dir) => withCustomerParts(s, dir) { cp =>
         // SPARK_GRAFT_KCORE_MIN_SHARED (default 1 = every co-purchase
         // pair, the gate's shape) bounds the GRAPH BUILD, not the peel:
         // the self-join's pair volume is Σd(p)² and exceeds this VM's
@@ -589,10 +569,8 @@ object AnalyticsQueries extends QueryModule {
           else pairs.groupBy(col("a.c"), col("b.c"))
             .agg(count(lit(1)).as("shared")).filter(col("shared") >= minShared)
             .select(col("a.c").as("src"), col("b.c").as("dst"))
+        // kCore materializes its own edge checkpoint from the pairs
         val (core, rounds) = GraphAnalytics.kCore(edges, k = 500)
-        // kCore materialized its own e0 checkpoint from the pair
-        // stream above — cp's blocks are dead now; release them
-        GraphAnalytics.freeCheckpoint(cp0)
         State.kcoreRounds = Some(rounds)
         core.select(col("id"), col("degree"))
       },

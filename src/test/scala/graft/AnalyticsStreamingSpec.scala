@@ -34,27 +34,6 @@ class AnalyticsStreamingSpec extends GraftSuite {
     assert(cc(4L) == 4L && cc(5L) == 4L)
   }
 
-  test("DataFrame HashMin CC agrees with GraphX, including isolated vertices") {
-    val expected = GraphAnalytics.connectedComponents(spark, g)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val df = GraphAnalytics.connectedComponentsDF(spark, g)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(df == expected)
-
-    // a longer chain exercises multi-round convergence, an isolated
-    // vertex its own singleton component (GraphX drops isolates only
-    // because Graph(vs, es) keeps all vs — ours reads live.nodes, same)
-    val b2 = new GraphBuilder
-    val chain = (1 to 6).map(_ => b2.addNode("t"))
-    chain.sliding(2).foreach { case Seq(x, y) => b2.addEdge(y, x, "r") } // reversed edges
-    b2.addNode("t") // isolate
-    val g2 = b2.snapshot(spark)
-    val df2 = GraphAnalytics.connectedComponentsDF(spark, g2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(df2 == (1 to 6).map(_.toLong -> 1L).toMap + (7L -> 7L),
-      "edge direction is ignored; min id wins; isolates are singletons")
-  }
-
   test("pageRank: normalized static ranks match the DAG closed form") {
     val pr = GraphAnalytics.pageRank(spark, g, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -64,32 +43,6 @@ class AnalyticsStreamingSpec extends GraftSuite {
     un.foreach { case (id, r) =>
       assert(math.abs(pr(id) - r * scale) < 1e-9, s"vertex $id")
     }
-  }
-
-  test("Pregel hop distances, forward and reverse, bounded") {
-    val d = GraphAnalytics.hopDistances(spark, g, Set(1L), maxHops = 2)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(d == Map(1L -> 0, 2L -> 1, 3L -> 2))
-    val r = GraphAnalytics.hopDistances(spark, g, Set(3L), maxHops = 2, reverse = true)
-      .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-    assert(r == Map(3L -> 0, 2L -> 1, 1L -> 2))
-    val bounded = GraphAnalytics.hopDistances(spark, g, Set(1L), maxHops = 1)
-      .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-    assert(bounded == Map(1L -> 0, 2L -> 1), "maxHops bounds the frontier")
-  }
-
-  test("DataFrame BFS (hopDistancesDF) matches Pregel on all scenarios") {
-    for ((srcs, hops, rev) <- Seq((Set(1L), 2, false), (Set(3L), 2, true),
-        (Set(1L), 1, false), (Set(1L, 4L), 2, false))) {
-      val df = GraphAnalytics.hopDistancesDF(spark, g, srcs, hops, rev)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val px = GraphAnalytics.hopDistances(spark, g, srcs, hops, rev)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(df == px, s"sources=$srcs maxHops=$hops reverse=$rev")
-    }
-    // sources not present in the graph contribute nothing
-    val ghost = GraphAnalytics.hopDistancesDF(spark, g, Set(99L), 2).collect()
-    assert(ghost.isEmpty)
   }
 
   test("graph cache evicts exactly the least-recently-used entry") {

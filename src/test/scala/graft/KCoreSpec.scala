@@ -72,25 +72,4 @@ class KCoreSpec extends GraftSuite {
     assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id),
       "the released RDD must leave the block-manager registry")
   }
-
-  test("iterative peel pins only the RETURNED frame — superseded rounds are released") {
-    // suites run sequentially in the forked test JVM, so the
-    // persistent-RDD registry delta is attributable to this call
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // a 12-path (≈6 peel rounds) + a surviving triangle
-    val path = (1L to 12L).sliding(2).map { case Seq(a, b) => (a, b) }.toSeq
-    val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
-    val (coreDf, rounds) = GraphAnalytics.kCore((path ++ tri).toDF("src", "dst"), 2)
-    assert(coreDf.count() === 3 && rounds >= 3)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 1,
-      s"only the returned core frame may stay pinned after $rounds rounds; " +
-        s"leaked ${added.size} RDDs — the per-round release regressed")
-    // (the returned frame is a projection OVER the checkpoint, so
-    // freeCheckpoint(coreDf) is rightly a no-op — release the residue
-    // through the registry to leave the suite clean)
-    added.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-  }
 }
