@@ -26,7 +26,7 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object Superstep {
 
-  val Level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+  private val Level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 
   /** Materialize `df` now. */
   def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true, Level)

@@ -37,12 +37,16 @@ object AnalyticsQueries extends QueryModule {
     */
   private def sharedPartsEdges(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    withCustomerParts(s, dir)(cp => cp.as("a")
+    withCustomerParts(s, dir)(cp => sharedPairs(cp)
+      .select(col("a.c").as("src"), col("b.c").as("dst"))
+      .localCheckpoint())
+
+  /** Customer pairs (a.c < b.c) sharing >= 4 distinct parts of `cp`. */
+  private def sharedPairs(cp: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cp.as("a")
       .join(cp.as("b"), col("a.p") === col("b.p") && col("a.c") < col("b.c"))
       .groupBy(col("a.c"), col("b.c")).agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= 4)
-      .select(col("a.c").as("src"), col("b.c").as("dst"))
-      .localCheckpoint())
 
   /** Lends `use` the distinct (customer c, part p) purchases,
     * checkpointed and released once `use` returns: `use` must
@@ -90,10 +94,7 @@ object AnalyticsQueries extends QueryModule {
     */
   private def sharedPartsWeighted(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    withCustomerParts(s, dir)(cp => cp.as("a")
-      .join(cp.as("b"), col("a.p") === col("b.p") && col("a.c") < col("b.c"))
-      .groupBy(col("a.c"), col("b.c")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= 4)
+    withCustomerParts(s, dir)(cp => sharedPairs(cp)
       .select(col("a.c").as("src"), col("b.c").as("dst"),
         greatest(lit(1L), lit(11L) - least(lit(10L), col("shared"))).as("w"))
       .localCheckpoint())
