@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.analytics.GraphAnalytics
 import graft.core.GraphBuilder
 import graft.model.PropertyValue._
+import graft.pipeline.Dedup
 import graft.streaming.EventStream
 
 class AnalyticsStreamingSpec extends GraftSuite {
+  import spark.implicits._
 
   private lazy val g = {
     // two components: (a-b-c) and (d-e)
@@ -34,6 +36,29 @@ class AnalyticsStreamingSpec extends GraftSuite {
     assert(cc(4L) == 4L && cc(5L) == 4L)
   }
 
+  test("DataFrame HashMin CC agrees with GraphX, including isolated vertices") {
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def hashMin(pairs: Seq[(Long, Long)]) =
+      labels(Dedup.clusterPairs(pairs.toDF("da", "db"), maxDriverPairs = 0))
+    assert(hashMin(Seq((1L, 2L), (2L, 3L), (4L, 5L))) ==
+      labels(GraphAnalytics.connectedComponents(spark, g)))
+
+    // a 6-chain stored with reversed edges, then an isolated vertex:
+    // GraphX labels the isolate alone; HashMin only sees edge endpoints
+    val b2 = new GraphBuilder
+    val chain = (1 to 6).map(_ => b2.addNode("t"))
+    val reversed = chain.sliding(2).map { case Seq(x, y) => b2.addEdge(y, x, "r"); (y, x) }.toList
+    b2.addNode("t")
+    val gx = labels(GraphAnalytics.connectedComponents(spark, b2.snapshot(spark)))
+    assert(gx == (1L to 6L).map(_ -> 1L).toMap + (7L -> 7L),
+      "edge direction is ignored; min id wins; isolates are singletons")
+    assert(hashMin(reversed) == gx - 7L)
+    // two parts, one with a cycle back to its smallest id
+    assert(hashMin(Seq((5L, 3L), (3L, 9L), (9L, 5L), (20L, 30L))) ==
+      Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 30L -> 20L))
+  }
+
   test("pageRank: normalized static ranks match the DAG closed form") {
     val pr = GraphAnalytics.pageRank(spark, g, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -43,6 +68,44 @@ class AnalyticsStreamingSpec extends GraftSuite {
     un.foreach { case (id, r) =>
       assert(math.abs(pr(id) - r * scale) < 1e-9, s"vertex $id")
     }
+  }
+
+  /** Reference BFS: a GraphX Pregel run over the served GraphX view of
+    * `g`, minimum hop distance from `srcs` within `maxHops`.
+    */
+  private def pregelHops(srcs: Set[Long], maxHops: Int, reverse: Boolean): Map[Long, Int] = {
+    val base = GraphAnalytics.toGraphX(g)
+    (if (reverse) base.reverse else base)
+      .mapVertices((id, _) => if (srcs.contains(id)) 0 else Int.MaxValue)
+      .pregel(Int.MaxValue, maxIterations = maxHops)(
+        (_, dist, msg) => math.min(dist, msg),
+        t =>
+          if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr) Iterator((t.dstId, t.srcAttr + 1))
+          else Iterator.empty,
+        (a, b) => math.min(a, b))
+      .vertices.filter(_._2 != Int.MaxValue).collect().toMap
+  }
+
+  private val hopCases = Seq(
+    (Set(1L), 2, false) -> Map(1L -> 0, 2L -> 1, 3L -> 2),
+    (Set(3L), 2, true) -> Map(3L -> 0, 2L -> 1, 1L -> 2),
+    (Set(1L), 1, false) -> Map(1L -> 0, 2L -> 1), // maxHops bounds the frontier
+    (Set(1L, 4L), 2, false) -> Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 0, 5L -> 1))
+
+  test("Pregel hop distances, forward and reverse, bounded") {
+    for (((srcs, hops, rev), want) <- hopCases)
+      assert(pregelHops(srcs, hops, rev) == want, s"sources=$srcs maxHops=$hops reverse=$rev")
+  }
+
+  test("DataFrame BFS (hopDistancesDF) matches Pregel on all scenarios") {
+    for (((srcs, hops, rev), want) <- hopCases) {
+      val df = GraphAnalytics.hopDistancesDF(spark, g, srcs, hops, rev)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(df == pregelHops(srcs, hops, rev) && df == want,
+        s"sources=$srcs maxHops=$hops reverse=$rev")
+    }
+    // sources not present in the graph contribute nothing
+    assert(GraphAnalytics.hopDistancesDF(spark, g, Set(99L), 2).collect().isEmpty)
   }
 
   test("graph cache evicts exactly the least-recently-used entry") {

@@ -231,19 +231,6 @@ class GraphOpsPropertySpec extends GraftSuite {
     }
   }
 
-  test("hopDistancesDF fixed cases: forward, reverse, bounded, two sources, ghost source") {
-    // two parts: 1 -> 2 -> 3 and 4 -> 5
-    val g = G(5, Seq((1L, 2L, 1L), (2L, 3L, 1L), (4L, 5L, 1L))).snapshot
-    def hops(srcs: Set[Long], maxHops: Int, reverse: Boolean = false) =
-      GraphAnalytics.hopDistancesDF(spark, g, srcs, maxHops, reverse)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(hops(Set(1L), 2) == Map(1L -> 0, 2L -> 1, 3L -> 2))
-    assert(hops(Set(3L), 2, reverse = true) == Map(3L -> 0, 2L -> 1, 1L -> 2))
-    assert(hops(Set(1L), 1) == Map(1L -> 0, 2L -> 1), "maxHops bounds the frontier")
-    assert(hops(Set(1L, 4L), 2) == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 0, 5L -> 1))
-    assert(hops(Set(99L), 2).isEmpty, "a source that is not a vertex reaches nothing")
-  }
-
   /** Connected components of the pair graph: id -> smallest member. */
   private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val adj = pairs.flatMap(e => Seq(e, e.swap)).groupMap(_._1)(_._2)
@@ -263,20 +250,6 @@ class GraphOpsPropertySpec extends GraftSuite {
       val got = rows2(Dedup.clusterPairs(g.pairs.toDF("da", "db"), maxDriverPairs = 0))
       assert(got.toMap == components(g.pairs) && got.size == got.toMap.size, s"seed $seed: $g")
     }
-  }
-
-  test("connected components fixed cases: direction ignored, min id wins, isolates alone") {
-    // a 6-chain stored with reversed edges, then an isolated vertex
-    val chain = (1L to 6L).sliding(2).map { case Seq(x, y) => (y, x, 1L) }.toSeq
-    val g = G(7, chain)
-    val gx = rows2(GraphAnalytics.connectedComponents(spark, g.snapshot)).toMap
-    assert(gx == (1L to 6L).map(_ -> 1L).toMap + (7L -> 7L))
-    val hashMin = rows2(Dedup.clusterPairs(g.pairs.toDF("da", "db"), maxDriverPairs = 0)).toMap
-    assert(hashMin == (1L to 6L).map(_ -> 1L).toMap)
-    // two parts, one with a cycle back to its smallest id
-    val two = Seq((5L, 3L), (3L, 9L), (9L, 5L), (20L, 30L))
-    assert(rows2(Dedup.clusterPairs(two.toDF("da", "db"), maxDriverPairs = 0)).toMap ==
-      Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 30L -> 20L))
   }
 
   test("property: maximalIndependentSet is independent and maximal") {
