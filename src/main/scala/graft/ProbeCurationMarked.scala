@@ -55,7 +55,7 @@ object ProbeCurationMarked {
     /** The composed incremental mine, off the stores' LIVE views. */
     def mine(exact: String, bands: String, winnow: String): (Long, Long) = {
       // exact: batch doc survives iff it IS the keeper among corpus ∪ batch
-      val keepers = Dedup.exactKeepers(Dedup.exactIndexLive(spark, exact))
+      val keepers = Dedup.exactKeepers(Tombstones.live(spark, exact, "id"))
         .select(col("content_hash"), col("keep_id"))
       val exKeep = Dedup.exactDuplicatesIncremental(keepers, batch,
           "doc_id", col("text"))
@@ -68,13 +68,13 @@ object ProbeCurationMarked {
       val corpusLive = Tombstones.applyTo(
         spark.read.parquet(survP), bands, "doc_id")
       val pairs = Dedup.nearDuplicatesIncremental(corpusLive,
-        Dedup.bandTableLive(spark, bands), exB, "doc_id", col("text"), 0.7)
+        Tombstones.live(spark, bands, "id"), exB, "doc_id", col("text"), 0.7)
       val survivors = exB.join(
         pairs.select(col("db").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
       val nSurv = survivors.count()
       // winnow leg: batch fingerprint matches vs the marked index
       val nWin = TextOps.winnowMatches(
-        TextOps.winnowLive(spark, winnow, "id"),
+        Tombstones.live(spark, winnow, "id"),
         batch.select(col("doc_id").as("id"), col("text")),
         "id", col("text"), 3, 4).count()
       (nSurv, nWin)
@@ -111,9 +111,9 @@ object ProbeCurationMarked {
 
     // the maintenance window buys the taxes back on every store
     val tC = System.nanoTime()
-    Dedup.exactIndexCompact(spark, exactP, s"$root/exact2")
-    Dedup.bandTableCompact(spark, bandsP, s"$root/bands2")
-    TextOps.winnowCompact(spark, winnowP, s"$root/winnow2", "id")
+    Tombstones.compact(spark, exactP, s"$root/exact2", "id")
+    Tombstones.compact(spark, bandsP, s"$root/bands2", "id")
+    Tombstones.compact(spark, winnowP, s"$root/winnow2", "id")
     println(f"""{"probe":"curation_marked","event":"compact_all","sec":${(System.nanoTime() - tC) / 1e9}%.2f}""")
     timeMine("compacted", s"$root/exact2", s"$root/bands2", s"$root/winnow2")
     spark.stop()

@@ -14,7 +14,7 @@ import graft.pipeline.{Dedup, Tombstones}
   * for each backlog shape — varying marker CARDINALITY (how many ids
   * the anti-join must probe against) and FRAGMENTATION (how many
   * batch files the tombstone union lists and reads) — times a full
-  * live-view scan (count through `bandTableLive`, which cannot prune
+  * live-view scan (count through `Tombstones.live`, which cannot prune
   * the anti-join) `reps` times. Ends with a versioned compact and a
   * post-compact scan: the read the maintenance window buys back.
   * Tombstone ids are real id ranges; `Tombstones.clear` resets the
@@ -44,7 +44,7 @@ object ProbeMarkers {
 
     def timeScan(tag: String): Seq[Double] = (1 to reps).map { _ =>
       val s = System.nanoTime()
-      val c = Dedup.bandTableLive(spark, live).count()
+      val c = Tombstones.live(spark, live, "id").count()
       val w = (System.nanoTime() - s) / 1e9
       println(f"""{"probe":"markers","shape":"$tag%s","live_rows":$c,"sec":$w%.2f}""")
       w
@@ -87,13 +87,13 @@ object ProbeMarkers {
     // the maintenance window: compact under the worst backlog, then
     // read the fresh version (marker-free bare scan)
     val tC = System.nanoTime()
-    Dedup.bandTableCompactVersioned(spark, layout)
+    Tombstones.compactVersioned(spark, layout)(Tombstones.compact(spark, _, _, "id"))
     val cSec = (System.nanoTime() - tC) / 1e9
     println(f"""{"probe":"markers","event":"compact","sec":$cSec%.2f}""")
     val fresh = graft.core.Versions.currentPath(layout).get
     (1 to reps).foreach { _ =>
       val s = System.nanoTime()
-      val c = Dedup.bandTableLive(spark, fresh).count()
+      val c = Tombstones.live(spark, fresh, "id").count()
       println(f"""{"probe":"markers","shape":"compacted","live_rows":$c,"sec":${(System.nanoTime() - s) / 1e9}%.2f}""")
     }
     spark.stop()

@@ -41,10 +41,9 @@ object Graft {
       // THE OPERATOR KNOWS ITS AMPLIFICATION — pinned-width
       // `repartition(P, key)` (REPARTITION_BY_NUM is never coalesced
       // by AQE) applied conditionally when the materialized input is
-      // narrower than the machine — not with a global knob.
-      // Env-overridable for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION_BYTES", "1048576"))
+      // narrower than the machine — not with a global knob. Set
+      // explicitly rather than left to Spark's default.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1048576")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -16,13 +16,15 @@ package graft.core
   * applied (counters without markers, or negated segments the
   * snapshot already folded), silently corrupting counts. Marker-ONLY
   * stores close the window automatically
-  * ([[graft.pipeline.Tombstones.compactVersionedRecheck]] re-applies
+  * ([[graft.pipeline.Tombstones.compactVersioned]] re-applies
   * straggler batches — always safe because markers carry no
   * counters); the coupled write CANNOT be replayed without
   * double-counting, so the two writers must exclude each other. That
   * exclusion used to be a runbook rule ("pause takedowns during the
   * maintenance window"); this object makes it a lock both sides take
-  * on the SAME store directory, built on the single-winner nonce lock
+  * on the SAME store directory — coupled takedowns through
+  * [[withLock]], versioned compacts through [[compactVersioned]] —
+  * built on the single-winner nonce lock
   * ([[Sidecar.acquireLock]]/[[Sidecar.releaseLock]], the primitive
   * [[Model]] and [[graft.operators.TxLog]] compaction already trust,
   * SidecarLockSpec).
@@ -72,5 +74,19 @@ object MaintLock {
     val nonce = Sidecar.acquireLock(lock, horizonMs)
       .getOrElse(throw new StoreBusy(store, role))
     try f finally Sidecar.releaseLock(lock, nonce)
+  }
+
+  /** Compact the live version of the versioned `root` into its next
+    * version via `write(src, dst)` and flip the pointer, holding the
+    * SOURCE version's lock across the whole snapshot→flip window — the
+    * coupled stores' counterpart of
+    * [[graft.pipeline.Tombstones.compactVersioned]]. Returns the new
+    * live version; raises when `root` has no live version, and
+    * [[StoreBusy]] (as `role`) while a takedown holds the lock.
+    */
+  def compactVersioned(root: String, role: String)(
+      write: (String, String) => Unit): Long = {
+    val src = Versions.requireCurrentPath(root)
+    withLock(src, role)(Versions.publish(root)(write(src, _)))
   }
 }

@@ -58,6 +58,14 @@ object Versions {
   def currentPath(root: String): Option[String] =
     current(root).map(versionDir(root, _))
 
+  /** [[currentPath]] for a maintenance job (a versioned compact):
+    * raises when `root` has no live version, before anything is
+    * written under it.
+    */
+  private[graft] def requireCurrentPath(root: String): String =
+    currentPath(root).getOrElse(throw new IllegalArgumentException(
+      s"no live version at $root — publish through Versions first"))
+
   /** All version numbers present, flipped or not. */
   def versions(root: String): Seq[Long] =
     Sidecar.listNames(root)

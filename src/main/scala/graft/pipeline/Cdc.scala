@@ -148,11 +148,10 @@ object Cdc {
     * side) — so the survivors equal `chunkIndex(corpus \ tombstoned)`
     * bit-for-bit (`q_dedup_cdc_delete` gates this). O(index +
     * tombstone batch): the corpus text never re-reads; only the
-    * removed documents re-chunk. Caller contract (as for
-    * [[graft.pipeline.TextOps.winnowDelete]]): `tombstoned` carries
-    * the removed documents' text exactly as previously indexed — and
-    * a violation fails LOUD: a negative post-merge count is
-    * impossible under the contract, so both counts pass through
+    * removed documents re-chunk. Caller contract: `tombstoned`
+    * carries the removed documents' text exactly as previously
+    * indexed — and a violation fails LOUD: a negative post-merge
+    * count is impossible under the contract, so both counts pass through
     * [[CountGuard]] (raise, never a silent drop/under-count).
     * PERSISTENCE note: this computes in O(index + batch) but the
     * caller must republish the merged index to keep it — for a
@@ -299,14 +298,9 @@ object Cdc {
     * Returns the new live version.
     */
   def compactChunkStoreVersioned(spark: org.apache.spark.sql.SparkSession,
-      root: String): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish through Versions first"))
-    graft.core.MaintLock.withLock(src, "Cdc.compactChunkStoreVersioned") {
-      graft.core.Versions.publish(root)(dst => compactChunkStore(spark, src, dst))
-    }
-  }
+      root: String): Long =
+    graft.core.MaintLock.compactVersioned(root, "Cdc.compactChunkStoreVersioned")(
+      compactChunkStore(spark, _, _))
 
   /** Batch shared-chunk mining against the published [[chunkIndex]]:
     * for every chunk content occurring in the batch, the TOTAL copy

@@ -46,6 +46,9 @@ object Dedup {
     * [[exactIndex]] stores only `min(id)` per hash, so when the keeper
     * itself is tombstoned the surviving minimum is unrecoverable from
     * the index — a narrow-index takedown would need the corpus text.
+    * Takedowns go through [[Tombstones]] and are exact: keepers
+    * recompute over the live rows, so a removed keeper falls to the
+    * surviving minimum and a hash with no survivors vanishes.
     */
   def exactIndexFull(df: DataFrame, idCol: String, text: Column): DataFrame =
     df.select(md5(text).as("content_hash"), col(idCol).as("id"))
@@ -57,77 +60,6 @@ object Dedup {
   def exactKeepers(full: DataFrame): DataFrame =
     full.groupBy(col("content_hash"))
       .agg(count(lit(1)).as("n"), min(col("id")).as("keep_id"))
-
-  /** Takedown on an [[exactIndexFull]] index: drop the tombstoned
-    * ids. Per-doc purity makes the anti-join EXACTLY a reindex of the
-    * survivors — keepers recompute per read ([[exactKeepers]]), so a
-    * hash whose keeper was removed falls to the surviving minimum and
-    * a hash with no survivors vanishes (`q_dedup_exact_delete` gates
-    * this against a from-scratch reindex). Needs only the tombstoned
-    * IDS, never their text. No broadcast hint: a takedown-sized set
-    * broadcasts anyway under AQE's runtime size check, while an
-    * oversized batch degrades to a shuffle join instead of OOMing
-    * the driver — the hint would turn a soft contract ("tombstone
-    * sets are small") into a hard failure mode.
-    */
-  def exactIndexDelete(full: DataFrame, tombstones: DataFrame,
-      idCol: String): DataFrame =
-    full.join(tombstones.select(col(idCol).as("id")).distinct(),
-      Seq("id"), "left_anti")
-
-  /** Store-level takedown on a PUBLISHED [[exactIndexFull]] layout:
-    * the tombstoned ids land as ONE hidden marker batch under the
-    * layout ([[Tombstones.delete]] — the ANN layouts' mechanism,
-    * unchanged) — O(tombstone batch), no index row rewritten, no
-    * republish. Readers hide them via [[exactIndexLive]];
-    * [[exactIndexCompact]] purges rows and markers together.
-    */
-  def exactIndexDeleteAt(layoutPath: String, tombstones: DataFrame,
-      idCol: String): Long =
-    Tombstones.delete(layoutPath, tombstones, idCol)
-
-  /** Live rows of a published [[exactIndexFull]] layout: tombstoned
-    * ids hidden by the standard marker anti-join; with no tombstones
-    * the plan is byte-identical to the bare scan (TombstoneSpec's
-    * contract).
-    */
-  def exactIndexLive(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String): DataFrame =
-    Tombstones.applyTo(spark.read.parquet(layoutPath), layoutPath, "id")
-
-  /** Compact a published [[exactIndexFull]] layout: physically drop
-    * tombstoned per-doc rows into a fresh layout (which starts
-    * tombstone-free) and coalesce delete-era small files. The FULL
-    * per-doc shape is what compacts — compacting to the narrow
-    * keeper summary would forfeit every future takedown (the narrow
-    * index is adjudicated non-deletable: a tombstoned keeper's
-    * surviving minimum is unrecoverable from it). O(index) rewrite,
-    * the same cost class as every republish-family compact.
-    */
-  def exactIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String,
-      maxRecordsPerFile: Long = 1L << 22): Unit =
-    exactIndexLive(spark, srcPath)
-      .write.mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(dstPath)
-
-  /** [[exactIndexCompact]] into the next version of a versioned root,
-    * pointer flipped atomically ([[graft.core.Versions]]).
-    * delete-then-compact ≡ compact-then-delete ≡ survivor reindex
-    * (DedupIncrementalSpec pins the commute; `q_dedup_exact_compact`
-    * gates the compacted read against a from-scratch reindex).
-    * Tombstone batches landing after the compact's scan re-apply to
-    * the new version ([[Tombstones.compactVersionedRecheck]]).
-    * Returns the new live version.
-    */
-  def exactIndexCompactVersioned(spark: org.apache.spark.sql.SparkSession,
-      root: String): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish through Versions first"))
-    Tombstones.compactVersionedRecheck(spark, root, src)(dst =>
-      exactIndexCompact(spark, src, dst))
-  }
 
   /** Batch canonical map against the published [[exactIndex]]:
     * (id, keep_id) for every batch document — O(batch) hashing plus
@@ -200,14 +132,6 @@ object Dedup {
   private def bandKey(b: Int, rows: Int): Column =
     md5(concat_ws(",", lit(b.toString) +: (0 until rows).map(r => col(s"h${b * rows + r}").cast("string")): _*))
 
-  /** LSH band-key table `(id, band)` — the publishable dedup index
-    * artifact. A document's band keys depend only on its own text, so
-    * the table is incrementally maintainable: band a new batch with
-    * this same function and union/append, never re-banding the
-    * corpus ([[nearDuplicatesIncremental]]). At cluster scale publish
-    * it bucketed by `band` so the candidate self-join is
-    * exchange-free, exactly like the graph snapshot's bucketed edges.
-    */
   /** (bands, rows) whose LSH S-curve midpoint best matches the target
     * Jaccard threshold: candidate-pair probability at similarity s is
     * `1 - (1 - s^r)^b`, and its 50% point sits at `(1/b)^(1/r)` — pick
@@ -226,6 +150,17 @@ object Dedup {
     }
   }
 
+  /** LSH band-key table `(id, band)` — the publishable dedup index
+    * artifact. A document's band keys depend only on its own text, so
+    * the table is incrementally maintainable: band a new batch with
+    * this same function and union/append, never re-banding the
+    * corpus ([[nearDuplicatesIncremental]]). At cluster scale publish
+    * it bucketed by `band` so the candidate self-join is
+    * exchange-free, exactly like the graph snapshot's bucketed edges.
+    * Takedowns go through [[Tombstones]] and are exact: band
+    * membership is per-document, so removing a document removes
+    * exactly its candidate pairs.
+    */
   def bandTable(df: DataFrame, idCol: String, text: Column,
       numHashes: Int = 16, bands: Int = 4, shingleN: Int = 3): DataFrame = {
     require(numHashes % bands == 0,
@@ -252,72 +187,6 @@ object Dedup {
   def lshCandidates(df: DataFrame, idCol: String, text: Column,
       numHashes: Int = 16, bands: Int = 4, shingleN: Int = 3): DataFrame =
     candidatesFromBands(bandTable(df, idCol, text, numHashes, bands, shingleN))
-
-  /** Takedown on a published [[bandTable]]: drop the tombstoned ids.
-    * A document's band rows derive from its own text alone, so the
-    * anti-join equals `bandTable(corpus \ tombstoned)` bit-for-bit —
-    * the winnow-index argument one family over. Needs only the
-    * tombstoned IDS. No broadcast hint (see [[exactIndexDelete]]):
-    * AQE broadcasts takedown-sized sets at runtime; an oversized
-    * batch degrades to a shuffle join rather than OOMing the driver.
-    */
-  def bandTableDelete(bands: DataFrame, tombstones: DataFrame,
-      idCol: String): DataFrame =
-    bands.join(tombstones.select(col(idCol).as("id")).distinct(),
-      Seq("id"), "left_anti")
-
-  /** Store-level takedown on a PUBLISHED [[bandTable]] layout: one
-    * tombstone-marker batch ([[Tombstones.delete]]) — O(tombstone
-    * batch), no band row rewritten, no republish. The upgrade over
-    * [[bandTableDelete]]-then-republish at 100 TB: the band table is
-    * the biggest dedup index (bands·N rows), and a takedown now costs
-    * one small file write instead of an O(index) rewrite; readers pay
-    * the marker anti-join ([[bandTableLive]]) until
-    * [[bandTableCompact]] purges rows and markers together.
-    */
-  def bandTableDeleteAt(layoutPath: String, tombstones: DataFrame,
-      idCol: String): Long =
-    Tombstones.delete(layoutPath, tombstones, idCol)
-
-  /** Live rows of a published [[bandTable]] layout: tombstoned ids
-    * hidden by the standard marker anti-join; with no tombstones the
-    * plan is the bare scan (TombstoneSpec's contract). Feed this to
-    * [[nearDuplicatesFromBands]] — band membership is per-doc, so
-    * hiding a doc's band rows removes exactly its candidate pairs.
-    */
-  def bandTableLive(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String): DataFrame =
-    Tombstones.applyTo(spark.read.parquet(layoutPath), layoutPath, "id")
-
-  /** Compact a published [[bandTable]] layout: physically drop
-    * tombstoned band rows into a fresh layout (tombstone-free) and
-    * coalesce delete-era small files. O(index) rewrite — the cost the
-    * marker delete deferred, paid once per maintenance window instead
-    * of once per takedown batch.
-    */
-  def bandTableCompact(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String,
-      maxRecordsPerFile: Long = 1L << 22): Unit =
-    bandTableLive(spark, srcPath)
-      .write.mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(dstPath)
-
-  /** [[bandTableCompact]] into the next version of a versioned root,
-    * pointer flipped atomically; delete-then-compact ≡
-    * compact-then-delete ≡ survivor re-band (DedupIncrementalSpec
-    * pins the commute, `q_dedup_minhash_compact` gates the read).
-    * Tombstone batches landing after the compact's scan re-apply to
-    * the new version ([[Tombstones.compactVersionedRecheck]]).
-    * Returns the new live version.
-    */
-  def bandTableCompactVersioned(spark: org.apache.spark.sql.SparkSession,
-      root: String): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish through Versions first"))
-    Tombstones.compactVersionedRecheck(spark, root, src)(dst =>
-      bandTableCompact(spark, src, dst))
-  }
 
   /** Full near-dup mine through a PUBLISHED band table — the read
     * side of the takedown leg: candidates from the table's own band
@@ -742,24 +611,6 @@ object Dedup {
     sums.select(col("id"), hash.as("simhash"))
   }
 
-  /** SimHash near-dup pairs at Hamming distance <= maxHamming via the
-    * Manku-Jarvelin-Sarma block-permutation trick (WWW'07): split the
-    * fingerprint into `maxHamming + 1` blocks — by pigeonhole, any
-    * pair within the distance bound agrees EXACTLY on at least one
-    * block — so candidates come from `blocks` cheap equi-joins on
-    * (block, block-bits) keys, never an all-pairs XOR scan, and only
-    * candidates pay the exact `bit_count(xor)` verify. Collision
-    * groups ([[simhashByDoc]] + groupBy) catch distance 0 only; this
-    * is the production form that catches the near-misses.
-    *
-    * Keys are uniform (simhash bits), so the candidate join is
-    * skew-free; block count stays `maxHamming + 1` regardless of
-    * corpus size — the selectivity knob is fingerprint WIDTH (`bits`),
-    * not the join fan-out. At a fixed width the candidate volume is
-    * ~N²/2^(bits/blocks): size the width to the corpus with
-    * [[autoSimhashBits]] / [[simhashHammingPairsAuto]] (the default
-    * 32 is the small-corpus/test setting).
-    */
   /** (tbl, key, id, simhash) for the single-block scheme: one row per
     * (doc, block), key = that block's bits. Shared by the pair join
     * and the candidate-volume probe (graft.ProbeSimhash).
@@ -789,6 +640,24 @@ object Dedup {
       .distinct()
   }
 
+  /** SimHash near-dup pairs at Hamming distance <= maxHamming via the
+    * Manku-Jarvelin-Sarma block-permutation trick (WWW'07): split the
+    * fingerprint into `maxHamming + 1` blocks — by pigeonhole, any
+    * pair within the distance bound agrees EXACTLY on at least one
+    * block — so candidates come from `blocks` cheap equi-joins on
+    * (block, block-bits) keys, never an all-pairs XOR scan, and only
+    * candidates pay the exact `bit_count(xor)` verify. Collision
+    * groups ([[simhashByDoc]] + groupBy) catch distance 0 only; this
+    * is the production form that catches the near-misses.
+    *
+    * Keys are uniform (simhash bits), so the candidate join is
+    * skew-free; block count stays `maxHamming + 1` regardless of
+    * corpus size — the selectivity knob is fingerprint WIDTH (`bits`),
+    * not the join fan-out. At a fixed width the candidate volume is
+    * ~N²/2^(bits/blocks): size the width to the corpus with
+    * [[autoSimhashBits]] / [[simhashHammingPairsAuto]] (the default
+    * 32 is the small-corpus/test setting).
+    */
   def simhashHammingPairs(df: DataFrame, idCol: String, text: Column,
       maxHamming: Int = 3, bits: Int = 32): DataFrame =
     verifiedPairs(
@@ -829,25 +698,6 @@ object Dedup {
     simhashHammingPairs(df, idCol, text, maxHamming,
       autoSimhashBits(df.count(), maxHamming, targetBucketRows))
 
-  /** SimHash Hamming pairs via Manku's PERMUTED-TABLE design (WWW'07
-    * §3) — the tier past [[autoSimhashBits]]' 16-bit key cap. Split
-    * the fingerprint into `numBlocks > maxHamming + 1` blocks; a pair
-    * within Hamming distance `maxHamming` differs in at most
-    * `maxHamming` blocks, so it agrees EXACTLY on some combination of
-    * `numBlocks - maxHamming` blocks (pigeonhole — recall stays
-    * exact). Each combination is one "table": its key concatenates the
-    * chosen blocks' bits, `C(numBlocks, maxHamming)` tables total.
-    * Keys carry `~bits·(numBlocks-maxHamming)/numBlocks` bits — e.g.
-    * 31 at numBlocks=6 vs the 16 the single-block scheme caps at — so
-    * expected candidates are `tables · N² / 2^keyWidth`: the extra
-    * key bits buy ~2^15 candidate reduction for a 5× table fan-out at
-    * numBlocks=6. `numBlocks = maxHamming + 1` degenerates to exactly
-    * [[simhashHammingPairs]] (one block per table).
-    *
-    * Reference-shape anchor: several independent key encodings over
-    * one record set is the trie's multi-index layout
-    * (HGraphStorage Index.hs:70-138).
-    */
   /** (tbl, key, id, simhash) for the permuted-table scheme: one row
     * per (doc, combination table), key = the combination's block bits
     * concatenated. Shared by the pair join and the probe.
@@ -880,6 +730,25 @@ object Dedup {
       .select(col("id"), col("simhash"), col("tk.tbl").as("tbl"), col("tk.key").as("key"))
   }
 
+  /** SimHash Hamming pairs via Manku's PERMUTED-TABLE design (WWW'07
+    * §3) — the tier past [[autoSimhashBits]]' 16-bit key cap. Split
+    * the fingerprint into `numBlocks > maxHamming + 1` blocks; a pair
+    * within Hamming distance `maxHamming` differs in at most
+    * `maxHamming` blocks, so it agrees EXACTLY on some combination of
+    * `numBlocks - maxHamming` blocks (pigeonhole — recall stays
+    * exact). Each combination is one "table": its key concatenates the
+    * chosen blocks' bits, `C(numBlocks, maxHamming)` tables total.
+    * Keys carry `~bits·(numBlocks-maxHamming)/numBlocks` bits — e.g.
+    * 31 at numBlocks=6 vs the 16 the single-block scheme caps at — so
+    * expected candidates are `tables · N² / 2^keyWidth`: the extra
+    * key bits buy ~2^15 candidate reduction for a 5× table fan-out at
+    * numBlocks=6. `numBlocks = maxHamming + 1` degenerates to exactly
+    * [[simhashHammingPairs]] (one block per table).
+    *
+    * Reference-shape anchor: several independent key encodings over
+    * one record set is the trie's multi-index layout
+    * (HGraphStorage Index.hs:70-138).
+    */
   def simhashHammingPairsTables(df: DataFrame, idCol: String, text: Column,
       maxHamming: Int = 3, numBlocks: Int = 6, bits: Int = 64): DataFrame = {
     require(bits >= 1 && bits <= 64, s"simhash width must be 1..64, got $bits")

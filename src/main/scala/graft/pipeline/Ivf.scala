@@ -305,14 +305,14 @@ object Ivf {
     * untouched — the caller flips readers to `dstPath` and retires the
     * source, the same publish-then-swap pattern as the snapshot
     * manifest (atomic for readers where an in-place rewrite could
-    * never be).
+    * never be). For an atomic flip, run it through
+    * [[Tombstones.compactVersioned]].
     */
   def compactPartitioned(spark: SparkSession, srcPath: String, dstPath: String,
-      idCol: String, maxRecordsPerFile: Long = 1L << 22): Unit = {
-    val live = Tombstones.applyTo(spark.read.parquet(srcPath), srcPath, idCol)
-    live.repartition(col("cell"))
+      idCol: String): Unit = {
+    Tombstones.live(spark, srcPath, idCol).repartition(col("cell"))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", Tombstones.compactRecordsPerFile)
       .partitionBy("cell").parquet(dstPath)
     // geometry sidecars (either kind, plus the legacy bare fingerprint)
     Seq("_ivf_meta.properties", "_ivfpq_meta.properties", "_ivf_centroids.sha")
@@ -326,29 +326,6 @@ object Ivf {
     }
     graft.core.Sidecar.readString(s"$srcPath/_ivf_applied_batches")
       .foreach(graft.core.Sidecar.writeString(s"$dstPath/_ivf_applied_batches", _))
-  }
-
-  /** [[compactPartitioned]] composed with [[graft.core.Versions]]:
-    * compact the LIVE version of a versioned layout root into the
-    * NEXT version dir and flip the pointer — the publish-then-swap
-    * the compaction contract prescribes, with the swap actually
-    * atomic for readers (no "flip readers by hand" step). The source
-    * version stays on disk for in-flight reads until
-    * [[graft.core.Versions.retire]] collects it. Returns the new
-    * live version number. Tombstone batches landing after the
-    * compact's scan are re-applied to the new version
-    * ([[Tombstones.compactVersionedRecheck]] — the lost-delete
-    * guard; takedown writers still count as writers during the
-    * window).
-    */
-  def compactVersioned(spark: SparkSession, root: String, idCol: String,
-      maxRecordsPerFile: Long = 1L << 22): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish a layout through Versions first"))
-    Tombstones.compactVersionedRecheck(spark, root, src) { dst =>
-      compactPartitioned(spark, src, dst, idCol, maxRecordsPerFile)
-    }
   }
 
   /** Search over a published cell-partitioned corpus. The probe-cell

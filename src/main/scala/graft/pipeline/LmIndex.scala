@@ -88,10 +88,10 @@ object LmIndex {
     * (`q_text_lm_delete` gates this; exact-long sums, no float
     * residue). O(tombstone batch): no published row is rewritten —
     * the same additive-segment contract as [[append]]. Caller
-    * contract (as for [[TextOps.winnowDelete]]): `tombstoned` carries
-    * the removed documents' text exactly as previously published, and
-    * the same single-writer rule applies. The (negated counts, token
-    * total) pair makes this a COUPLED write: it runs under the
+    * contract: `tombstoned` carries the removed documents' text
+    * exactly as previously published, and the same single-writer rule
+    * applies. The (negated counts, token total) pair makes this a
+    * COUPLED write: it runs under the
     * store's maintenance lock ([[graft.core.MaintLock]]) and raises
     * if a [[compactVersioned]] window is open.
     */
@@ -183,14 +183,9 @@ object LmIndex {
     * it; a mistimed [[delete]] raises instead of silently corrupting
     * the counts, MaintLockSpec). Returns the new live version.
     */
-  def compactVersioned(spark: SparkSession, root: String): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish through Versions first"))
-    graft.core.MaintLock.withLock(src, "LmIndex.compactVersioned") {
-      graft.core.Versions.publish(root)(dst => compact(spark, src, dst))
-    }
-  }
+  def compactVersioned(spark: SparkSession, root: String): Long =
+    graft.core.MaintLock.compactVersioned(root, "LmIndex.compactVersioned")(
+      compact(spark, _, _))
 
   /** The base sidecar verbatim — streamed counter deltas NOT folded.
     * Writers that rewrite the base total ([[append]]/[[delete]]) must

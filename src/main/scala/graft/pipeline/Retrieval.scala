@@ -337,8 +337,7 @@ object Retrieval {
     * is left untouched — flip readers then retire it, or use
     * [[compactIndexVersioned]] for an atomic flip.
     */
-  def compactIndex(spark: SparkSession, srcPath: String, dstPath: String,
-      maxRecordsPerFile: Long = 1L << 22): Unit = {
+  def compactIndex(spark: SparkSession, srcPath: String, dstPath: String): Unit = {
     val meta = readLexMeta(srcPath) // kind guard + folds counter deltas
     val tp = spark.read.parquet(postingsPath(srcPath))
     val live = readTombstones(spark, srcPath)
@@ -346,7 +345,7 @@ object Retrieval {
     live.repartition(col("tb"))
       .sortWithinPartitions(col("tb"), col("token"))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", Tombstones.compactRecordsPerFile)
       .partitionBy("tb").parquet(postingsPath(dstPath))
     // doclens REBUILT from the union of the surviving source sidecars
     // (base + streamed trees, tombstones anti-joined out) and the live
@@ -388,26 +387,18 @@ object Retrieval {
     * applied to neither side or HALF-applied (counters without
     * markers or vice versa). Unlike the marker-only stores (which get
     * an automatic post-flip re-apply,
-    * [[Tombstones.compactVersionedRecheck]] — markers carry no
+    * [[Tombstones.compactVersioned]] — markers carry no
     * counters, so re-application is always safe), the coupled write
     * cannot be replayed without double-counting risk. Both writers
     * therefore take the source version's maintenance lock
-    * ([[graft.core.MaintLock]]): this compact holds it across the
-    * whole snapshot→flip window, and a mistimed [[deleteDocs]] raises
+    * ([[graft.core.MaintLock.compactVersioned]]): this compact holds
+    * it across the whole snapshot→flip window, and a mistimed [[deleteDocs]] raises
     * [[graft.core.MaintLock.StoreBusy]] instead of silently
     * corrupting counters (MaintLockSpec pins both directions).
     */
-  def compactIndexVersioned(spark: SparkSession, root: String,
-      maxRecordsPerFile: Long = 1L << 22): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish an index through Versions first"))
-    graft.core.MaintLock.withLock(src, "compactIndexVersioned") {
-      graft.core.Versions.publish(root) { dst =>
-        compactIndex(spark, src, dst, maxRecordsPerFile)
-      }
-    }
-  }
+  def compactIndexVersioned(spark: SparkSession, root: String): Long =
+    graft.core.MaintLock.compactVersioned(root, "compactIndexVersioned")(
+      compactIndex(spark, _, _))
 
   /** Takedown support for the published index — the lexical analog of
     * the ANN tiers' id-level tombstones: deletes write a batch of

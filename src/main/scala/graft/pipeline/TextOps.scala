@@ -367,6 +367,11 @@ object TextOps {
     * Shape: one posexplode + ONE per-doc window function (docs bound
     * the partition, so no skew) + a distinct. Texts shorter than k
     * tokens hash as one whole-text gram ([[shingles]]' rule).
+    *
+    * Takedowns on the published index go through
+    * [[graft.pipeline.Tombstones]] and are exact: the df caps of
+    * [[winnowMatches]]/[[winnowOverlapPairs]] are recomputed over the
+    * survivors, so fingerprints capped only by removed copies resurface.
     */
   def winnow(docs: org.apache.spark.sql.DataFrame, idCol: String,
       text: Column, k: Int = 3, w: Int = 4): org.apache.spark.sql.DataFrame = {
@@ -390,18 +395,6 @@ object TextOps {
       .distinct()
   }
 
-  /** Cross-doc overlap against a PUBLISHED winnow fingerprint index
-    * (the MOSS use case): fingerprint the batch (O(batch) — winnowing
-    * is per-doc pure, so batch fingerprints ARE the incremental index
-    * append, and appended-artifact == republish bit-for-bit), join on
-    * the md5-uniform `fp` key, and report per (batch doc, corpus doc)
-    * the shared-fingerprint count with position evidence (earliest
-    * shared fingerprint position on each side). Over-common
-    * fingerprints (boilerplate/licence blocks — the fan-out hazard)
-    * are dropped at MATCH time by a document-frequency cap computed
-    * off the index, so the published artifact itself stays purely
-    * additive. `index` is `winnow(corpus, ...)` output (same k, w).
-    */
   /** The document-frequency cap as a Column: the absolute `maxDf`, or
     * — when `maxDfPermille` is set — that permille of the index's
     * distinct documents (floor 1). An absolute cap silently changes
@@ -422,6 +415,18 @@ object TextOps {
           greatest(floor(col("__ndocs") * p / 1000), lit(1L)))
     }
 
+  /** Cross-doc overlap against a PUBLISHED winnow fingerprint index
+    * (the MOSS use case): fingerprint the batch (O(batch) — winnowing
+    * is per-doc pure, so batch fingerprints ARE the incremental index
+    * append, and appended-artifact == republish bit-for-bit), join on
+    * the md5-uniform `fp` key, and report per (batch doc, corpus doc)
+    * the shared-fingerprint count with position evidence (earliest
+    * shared fingerprint position on each side). Over-common
+    * fingerprints (boilerplate/licence blocks — the fan-out hazard)
+    * are dropped at MATCH time by a document-frequency cap computed
+    * off the index, so the published artifact itself stays purely
+    * additive. `index` is `winnow(corpus, ...)` output (same k, w).
+    */
   def winnowMatches(index: org.apache.spark.sql.DataFrame,
       batch: org.apache.spark.sql.DataFrame, idCol: String, text: Column,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
@@ -449,79 +454,6 @@ object TextOps {
     * keyed by md5-uniform fingerprints and bounded by per-fp document
     * lists (capped at `maxDf`) — never all-pairs.
     */
-  /** Takedown on a published winnow index: drop every fingerprint of
-    * the tombstoned documents. Per-doc purity makes the anti-join
-    * EXACTLY a republish without those documents — the surviving rows
-    * are `winnow(corpus \ tombstoned)` bit-for-bit, the same property
-    * that makes the append leg O(batch). The read-path consequence is
-    * deliberate: [[winnowMatches]]/[[winnowOverlapPairs]] recompute
-    * the df cap over the SURVIVORS, so a fingerprint pushed over the
-    * cap by since-removed boilerplate copies RESURFACES after the
-    * takedown (`q_text_winnow_delete` gates this against a
-    * from-scratch mine of the reduced corpus). Tombstone sets are
-    * takedown-sized — stats/AQE broadcast them; no hard hint, so an
-    * oversized set degrades to a shuffle join instead of OOMing the
-    * driver ([[graft.pipeline.Dedup.exactIndexDelete]]'s policy).
-    */
-  def winnowDelete(index: org.apache.spark.sql.DataFrame, idCol: String,
-      tombstones: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    index.join(tombstones.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-
-  /** Store-level takedown on a PUBLISHED winnow index layout: the
-    * tombstoned ids land as ONE hidden marker batch
-    * ([[graft.pipeline.Tombstones.delete]]) — O(tombstone batch), no
-    * index row rewritten, no republish (the [[winnowDelete]]-then-
-    * republish alternative rewrites fingerprints·N rows per takedown).
-    * Readers mine through [[winnowLive]], and because the df cap is a
-    * QUERY-TIME aggregate over whatever view feeds the mine
-    * ([[winnowMatches]]/[[winnowOverlapPairs]] recompute it), the
-    * marker view preserves the takedown semantics exactly: caps
-    * recompute over survivors, suppressed fingerprints resurface —
-    * the property `q_text_winnow_delete` gates carries over to the
-    * store tier unchanged (`q_text_winnow_store_delete` gates it).
-    */
-  def winnowDeleteAt(layoutPath: String, tombstones: org.apache.spark.sql.DataFrame,
-      idCol: String): Long =
-    graft.pipeline.Tombstones.delete(layoutPath, tombstones, idCol)
-
-  /** Live rows of a published winnow index layout: tombstoned ids
-    * hidden by the standard marker anti-join; with no tombstones the
-    * plan is the bare scan (TombstoneSpec's contract). Feed this to
-    * [[winnowMatches]]/[[winnowOverlapPairs]] — winnowing is per-doc
-    * pure, so hiding a doc's rows removes exactly its fingerprints.
-    */
-  def winnowLive(spark: org.apache.spark.sql.SparkSession, layoutPath: String,
-      idCol: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Tombstones.applyTo(
-      spark.read.parquet(layoutPath), layoutPath, idCol)
-
-  /** Compact a published winnow index layout: physically drop
-    * tombstoned rows into a fresh layout (tombstone-free) and
-    * coalesce delete-era small files — the O(index) rewrite the
-    * marker delete deferred, paid once per maintenance window.
-    */
-  def winnowCompact(spark: org.apache.spark.sql.SparkSession, srcPath: String,
-      dstPath: String, idCol: String, maxRecordsPerFile: Long = 1L << 22): Unit =
-    winnowLive(spark, srcPath, idCol)
-      .write.mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(dstPath)
-
-  /** [[winnowCompact]] into the next version of a versioned root,
-    * pointer flipped atomically; tombstone batches landing after the
-    * compact's scan re-apply to the new version
-    * ([[graft.pipeline.Tombstones.compactVersionedRecheck]]).
-    * delete-then-compact ≡ compact-then-delete ≡ survivor re-winnow
-    * (WinnowIndexSpec pins the commute). Returns the new live version.
-    */
-  def winnowCompactVersioned(spark: org.apache.spark.sql.SparkSession,
-      root: String, idCol: String): Long = {
-    val src = graft.core.Versions.currentPath(root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no live version at $root — publish through Versions first"))
-    graft.pipeline.Tombstones.compactVersionedRecheck(spark, root, src)(dst =>
-      winnowCompact(spark, src, dst, idCol))
-  }
-
   def winnowOverlapPairs(index: org.apache.spark.sql.DataFrame, idCol: String,
       minShared: Int = 2, maxDf: Int = 1000,
       maxDfPermille: Option[Int] = None): org.apache.spark.sql.DataFrame = {

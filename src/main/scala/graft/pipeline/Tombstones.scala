@@ -3,27 +3,28 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sidecar
+import graft.core.{Sidecar, Versions}
 
-/** Id-level DELETES for published ANN layouts (IVF raw vectors,
-  * IVF-PQ codes, residual codes — anything cell-partitioned with an
-  * id column). The layouts are append-forever artifacts; a real
-  * corpus additionally needs takedowns and contamination removal, and
-  * rewriting a 100 TB layout per delete request is not an option. So
-  * deletes are TOMBSTONES — the same move the reference makes at row
-  * scale, where `deleteObject`/`deleteRelation` flag records dead and
-  * leave the bytes for a later defrag (HGraphStorage API.hs:432-444;
-  * the MVCC analog is [[graft.operators.Mvcc.deleteRecord]]):
+/** The one lifecycle of every id-marker store — the IVF raw-vector
+  * and IVF-PQ layouts, the exact-dedup index ([[Dedup.exactIndexFull]]),
+  * the MinHash band table ([[Dedup.bandTable]]) and the winnow
+  * fingerprint index ([[TextOps.winnow]]). The stores are
+  * append-forever artifacts; a real corpus additionally needs
+  * takedowns and contamination removal, and rewriting a 100 TB layout
+  * per delete request is not an option. So deletes are TOMBSTONES —
+  * the same move the reference makes at row scale, where
+  * `deleteObject`/`deleteRelation` flag records dead and leave the
+  * bytes for a later defrag (HGraphStorage API.hs:432-444; the MVCC
+  * analog is [[graft.operators.Mvcc.deleteRecord]]):
   *
   *  - [[delete]] stages a single-column id batch invisibly and makes
   *    it visible with ONE atomic directory rename into
   *    `layout/_tombstones/` — a crash mid-write leaves only staging,
   *    never a half-readable batch;
-  *  - every layout read path ([[Ivf.topKPartitioned]],
-  *    [[Ivf.topKBatch]], [[Pq.topKPartitionedPq]] and its residual
-  *    twin) routes through [[applyTo]]: an ANTI join against the
-  *    union of tombstone batches. Tombstone cardinality is
-  *    takedown-list-sized — MBs against a corpus of TBs — so the
+  *  - every read goes through [[live]] (or [[applyTo]] on a frame
+  *    already read, as the IVF/PQ top-k paths do): an ANTI join
+  *    against the union of tombstone batches. Tombstone cardinality
+  *    is takedown-list-sized — MBs against a corpus of TBs — so the
   *    join side is broadcast CONDITIONALLY on measured marker bytes
   *    ([[broadcastHintMaxBytes]]): under the bound a hard hint
   *    guarantees the broadcast even where ops disabled
@@ -31,15 +32,19 @@ import graft.core.Sidecar
   *    without the hint every marker-store read would shuffle the
   *    corpus-scale layout by id for a KB-sized marker set); past the
   *    bound the hint is withheld and an oversized backlog degrades
-  *    to a shuffle join instead of OOMing the driver — the same
-  *    policy as every other takedown anti-join
-  *    ([[Dedup.exactIndexDelete]]).
+  *    to a shuffle join instead of OOMing the driver.
   *    With NO tombstones the plan is byte-identical to the
   *    pre-delete plan (no join node at all, TombstoneSpec pins it);
-  *  - [[Ivf.compactPartitioned]] is the defrag: it rewrites live rows
-  *    only into a fresh layout (which therefore starts with an empty
-  *    tombstone set) and coalesces the small files streaming appends
-  *    accumulate.
+  *  - [[compact]] (flat stores) and [[Ivf.compactPartitioned]]
+  *    (cell-partitioned layouts) are the defrag: they rewrite live
+  *    rows only into a fresh layout (which therefore starts with an
+  *    empty tombstone set) and coalesce the small files streaming
+  *    appends and takedowns accumulate;
+  *  - [[compactVersioned]] runs either defrag into the next version
+  *    of a [[graft.core.Versions]] root and closes the lost-delete
+  *    window with a post-flip marker recheck;
+  *  - [[without]] is the in-memory takedown for a frame that is not
+  *    a published store (drop the ids, then republish).
   *
   * Semantics: a tombstone hides the ID — rows already in the layout
   * AND rows appended later under the same id — until compaction
@@ -100,12 +105,6 @@ object Tombstones {
     */
   val broadcastHintMaxBytes: Long = 64L << 20
 
-  /** [[ids]] with the size-conditional broadcast hint applied — the
-    * frame every marker anti-join should join against.
-    */
-  def hintedIds(spark: SparkSession, layoutPath: String): Option[DataFrame] =
-    ids(spark, layoutPath).map(hintSized(_, tombDir(layoutPath)))
-
   /** Hard-hint `df` for broadcast iff its backing files under `dir`
     * total under [[broadcastHintMaxBytes]] — shared with the lexical
     * tombstone reader ([[Retrieval]]), which keeps its own marker
@@ -119,10 +118,42 @@ object Tombstones {
     * hint — see the object doc), the untouched frame when they don't.
     */
   def applyTo(df: DataFrame, layoutPath: String, idCol: String): DataFrame =
-    hintedIds(df.sparkSession, layoutPath) match {
+    ids(df.sparkSession, layoutPath).map(hintSized(_, tombDir(layoutPath))) match {
       case None     => df
       case Some(ts) => df.join(ts, df(idCol) === ts("id"), "left_anti")
     }
+
+  /** Live rows of the published store at `path`, keyed by `idCol`. */
+  def live(spark: SparkSession, path: String, idCol: String): DataFrame =
+    applyTo(spark.read.parquet(path), path, idCol)
+
+  /** In-memory takedown: `df` without the rows whose `dfIdCol` is in
+    * `ids`' `idCol` — for a frame that is not (yet) a published store,
+    * e.g. before a republish. No broadcast hint: a takedown-sized set
+    * broadcasts anyway under AQE's runtime size check, while an
+    * oversized batch degrades to a shuffle join instead of OOMing the
+    * driver — the hint would turn a soft contract ("tombstone sets
+    * are small") into a hard failure mode.
+    */
+  def without(df: DataFrame, dfIdCol: String, ids: DataFrame,
+      idCol: String): DataFrame =
+    df.join(ids.select(col(idCol).as(dfIdCol)).distinct(), Seq(dfIdCol), "left_anti")
+
+  /** Rows per output file for every compact (marker stores and the
+    * lexical index): bounds file size where one task writes a whole
+    * cell or bucket.
+    */
+  private[pipeline] val compactRecordsPerFile: Long = 1L << 22
+
+  /** Compact a flat store: its [[live]] rows rewritten to `dst`
+    * (which starts tombstone-free), delete-era small files coalesced.
+    * O(index) — the rewrite the marker delete deferred, paid once per
+    * maintenance window instead of once per takedown batch.
+    */
+  def compact(spark: SparkSession, src: String, dst: String, idCol: String): Unit =
+    live(spark, src, idCol)
+      .write.mode("overwrite").option("maxRecordsPerFile", compactRecordsPerFile)
+      .parquet(dst)
 
   /** Drop every tombstone batch — an escape hatch for un-deleting
     * before any compaction ran ([[Ivf.compactPartitioned]] itself
@@ -132,10 +163,12 @@ object Tombstones {
   def clear(layoutPath: String): Unit =
     Sidecar.delete(tombDir(layoutPath), recursive = true)
 
-  /** Versioned compact with a post-flip tombstone RECHECK — the
-    * lost-delete guard for every marker store's maintenance window
-    * ([[Ivf.compactVersioned]], [[Dedup.exactIndexCompactVersioned]],
-    * [[Dedup.bandTableCompactVersioned]], the winnow store).
+  /** Compact the live version of the versioned `root` into its next
+    * version via `write(src, dst)` — [[compact]] for flat stores,
+    * [[Ivf.compactPartitioned]] for cell-partitioned ones — flip the
+    * pointer, and RECHECK the markers: the lost-delete guard for every
+    * marker store's maintenance window. Returns the new live version;
+    * raises when `root` has no live version.
     *
     * The window: a compact scans `src`'s live rows, writes the next
     * version, and flips the pointer — a tombstone batch landing in
@@ -148,21 +181,21 @@ object Tombstones {
     * the new live version. Re-application is idempotent-safe in both
     * directions — a marker for an id the scan already purged hides
     * nothing, a marker for one it copied hides it — because markers
-    * carry only ids, never counters (the coupled-artifact stores,
-    * lexical/LM/CDC, cannot use this guard; their deletes write data
-    * and are writers under the single-writer rule, see the
-    * IMPLEMENTATION.md runbook).
+    * carry only ids, never counters (the coupled stores, lexical/LM/
+    * CDC, cannot use this guard; their deletes write data, so their
+    * compacts take [[graft.core.MaintLock.compactVersioned]] instead).
     *
     * Residual window, documented not closed: a takedown writer that
     * resolved the version pointer before the flip and writes after
     * the re-list still loses its batch — takedown writers must pause
     * during the maintenance window (they count as writers).
     */
-  def compactVersionedRecheck(spark: SparkSession, root: String,
-      src: String)(write: String => Unit): Long = {
+  def compactVersioned(spark: SparkSession, root: String)(
+      write: (String, String) => Unit): Long = {
+    val src = Versions.requireCurrentPath(root)
     val pre = Sidecar.listNames(tombDir(src)).toSet
-    val v = graft.core.Versions.publish(root)(write)
-    val dst = graft.core.Versions.versionDir(root, v)
+    val v = Versions.publish(root)(write(src, _))
+    val dst = Versions.versionDir(root, v)
     Sidecar.listNames(tombDir(src)).filterNot(pre).foreach { name =>
       delete(dst, spark.read.parquet(s"${tombDir(src)}/$name"), "id"): Unit
     }

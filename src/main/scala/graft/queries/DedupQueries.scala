@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, Tombstones}
 import graft.sources.Tables
 
 /** Deduplication over the `documents` table. Hashing is md5-based so
@@ -217,7 +217,7 @@ object DedupQueries extends QueryModule {
             .write.mode("overwrite").parquet(p)
           p
         }
-        Dedup.exactKeepers(Dedup.exactIndexDelete(s.read.parquet(idxPath),
+        Dedup.exactKeepers(Tombstones.without(s.read.parquet(idxPath), "id",
           docs.filter(col("doc_id") % 5 === 0), "doc_id"))
       },
       Some("""SELECT md5(text) AS content_hash, count(*) AS n, min(doc_id) AS keep_id
@@ -246,13 +246,13 @@ object DedupQueries extends QueryModule {
             Dedup.exactIndexFull(docs, "doc_id", col("text"))
               .write.mode("overwrite").parquet(v1)
           }
-          Dedup.exactIndexDeleteAt(graft.core.Versions.currentPath(r).get,
+          Tombstones.delete(graft.core.Versions.currentPath(r).get,
             docs.filter(col("doc_id") % 7 === 2), "doc_id")
-          Dedup.exactIndexCompactVersioned(s, r): Unit
+          Tombstones.compactVersioned(s, r)(Tombstones.compact(s, _, _, "id")): Unit
           r
         }
         Dedup.exactKeepers(
-          Dedup.exactIndexLive(s, graft.core.Versions.currentPath(root).get))
+          Tombstones.live(s, graft.core.Versions.currentPath(root).get, "id"))
       },
       Some("""SELECT md5(text) AS content_hash, count(*) AS n, min(doc_id) AS keep_id
              |FROM documents WHERE doc_id % 7 <> 2 GROUP BY md5(text)""".stripMargin)
@@ -320,7 +320,7 @@ object DedupQueries extends QueryModule {
           p
         }
         Dedup.nearDuplicatesFromBands(
-          Dedup.bandTableDelete(s.read.parquet(bandsPath),
+          Tombstones.without(s.read.parquet(bandsPath), "id",
             docs.filter(col("doc_id") % 5 === 0), "doc_id"),
           docs.filter(col("doc_id") % 5 =!= 0), "doc_id", col("text"), 0.7)
       },
@@ -350,13 +350,13 @@ object DedupQueries extends QueryModule {
             Dedup.bandTable(docs, "doc_id", col("text"))
               .write.mode("overwrite").parquet(v1)
           }
-          Dedup.bandTableDeleteAt(graft.core.Versions.currentPath(r).get,
+          Tombstones.delete(graft.core.Versions.currentPath(r).get,
             docs.filter(col("doc_id") % 5 === 1), "doc_id")
-          Dedup.bandTableCompactVersioned(s, r): Unit
+          Tombstones.compactVersioned(s, r)(Tombstones.compact(s, _, _, "id")): Unit
           r
         }
         Dedup.nearDuplicatesFromBands(
-          Dedup.bandTableLive(s, graft.core.Versions.currentPath(root).get),
+          Tombstones.live(s, graft.core.Versions.currentPath(root).get, "id"),
           docs.filter(col("doc_id") % 5 =!= 1), "doc_id", col("text"), 0.7)
       },
       Some(s"""WITH ${lshPairsCtes(0.7)}
@@ -396,7 +396,7 @@ object DedupQueries extends QueryModule {
     // The 100 TB steady state the other gates miss in combination: a
     // standing layout that has absorbed takedowns (live tombstone
     // markers, not yet compacted) keeps ingesting batches. The
-    // O(batch) incremental leg mines through bandTableLive — the
+    // O(batch) incremental leg mines through Tombstones.live — the
     // marker anti-join must remove exactly the victims' candidate
     // pairs (band membership is per-doc), so the result equals the
     // incremental mine against a survivor-only republish, which is
@@ -413,13 +413,13 @@ object DedupQueries extends QueryModule {
           val p = SessionPublish.tempDir("graft-dedup-bands-marked") + "/bands"
           Dedup.bandTable(corpus0, "doc_id", col("text"))
             .write.mode("overwrite").parquet(p)
-          Dedup.bandTableDeleteAt(p,
+          Tombstones.delete(p,
             corpus0.filter(col("doc_id") % 5 === 0).select(col("doc_id")), "doc_id")
           p
         }
         Dedup.nearDuplicatesIncremental(
           corpus0.filter(col("doc_id") % 5 =!= 0),
-          Dedup.bandTableLive(s, bandsPath),
+          Tombstones.live(s, bandsPath, "id"),
           batch, "doc_id", col("text"), 0.7)
       },
       Some(s"""WITH ${lshPairsCtes(0.7)}

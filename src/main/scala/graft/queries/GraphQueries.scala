@@ -72,17 +72,14 @@ object GraphQueries extends QueryModule {
   private def bucketedName(s: org.apache.spark.sql.SparkSession, dir: String): String =
     SessionPublish.once(s, "bsnap|" + dir) {
       val base = "graft_bsnap_" + SessionPublish.token(dir)
-      // Publish-time knob, default sized by bytes-per-bucket
+      // Sized by bytes-per-bucket at publish time
       // (GraphSnapshot.autoBuckets). A/B at 100x SF (ROUND6.md): with
       // writer files aligned one-per-bucket, more buckets now pay as
       // the data grows (16: 1.59s, 32: 1.36s, 64: 1.37s on the
       // bucketed step query) — but at test SFs the 16-bucket floor
       // wins, so size by data volume, never by core count.
       val snap = TpchGraph.snapshot(s, dir)
-      val buckets = s.conf.getOption("graft.snapshot.buckets")
-        .orElse(sys.env.get("SPARK_GRAFT_BUCKETS")).map(_.toInt)
-        .getOrElse(snap.autoBuckets())
-      snap.writeBucketed(base, buckets,
+      snap.writeBucketed(base, snap.autoBuckets(),
         mirrorByDst = true, path = Some(SessionPublish.tempDir("graft-bucketed")))
       base
     }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.TextOps
+import graft.pipeline.{TextOps, Tombstones}
 import graft.sources.Tables
 
 /** Text analysis at scan speed over `documents`: token stats, quality
@@ -1079,8 +1079,8 @@ object TextQueries extends QueryModule {
             .write.mode("overwrite").parquet(p)
           p
         }
-        val pruned = TextOps.winnowDelete(s.read.parquet(idxPath), "doc_id",
-          docs.filter(col("doc_id") % 11 === 5).select(col("doc_id")))
+        val pruned = Tombstones.without(s.read.parquet(idxPath), "doc_id",
+          docs.filter(col("doc_id") % 11 === 5), "doc_id")
         TextOps.winnowOverlapPairs(pruned, "doc_id", minShared = 2, maxDf = 1000)
       },
       Some(s"""WITH $winnowCtes,
@@ -1112,11 +1112,11 @@ object TextQueries extends QueryModule {
           val p = SessionPublish.tempDir("graft-winnow-store-del") + "/index"
           TextOps.winnow(docs, "doc_id", col("text"), k = 3, w = 4)
             .write.mode("overwrite").parquet(p)
-          TextOps.winnowDeleteAt(p,
+          Tombstones.delete(p,
             docs.filter(col("doc_id") % 11 === 7).select(col("doc_id")), "doc_id")
           p
         }
-        TextOps.winnowOverlapPairs(TextOps.winnowLive(s, path, "doc_id"),
+        TextOps.winnowOverlapPairs(Tombstones.live(s, path, "doc_id"),
           "doc_id", minShared = 2, maxDf = 1000)
       },
       Some(s"""WITH $winnowCtes,
@@ -1130,7 +1130,7 @@ object TextQueries extends QueryModule {
     ),
 
     // ---- winnow STORE lifecycle: versioned compaction ----
-    // delete (markers) -> winnowCompactVersioned (atomic pointer
+    // delete (markers) -> Tombstones.compactVersioned (atomic pointer
     // flip; post-flip tombstone recheck) -> mine through the
     // compacted live view, which is a bare scan again (markers and
     // rows purged together). Must equal the survivor re-mine.
@@ -1145,13 +1145,13 @@ object TextQueries extends QueryModule {
             TextOps.winnow(docs, "doc_id", col("text"), k = 3, w = 4)
               .write.mode("overwrite").parquet(v1)
           }
-          TextOps.winnowDeleteAt(graft.core.Versions.currentPath(r).get,
+          Tombstones.delete(graft.core.Versions.currentPath(r).get,
             docs.filter(col("doc_id") % 11 === 3).select(col("doc_id")), "doc_id")
-          TextOps.winnowCompactVersioned(s, r, "doc_id"): Unit
+          Tombstones.compactVersioned(s, r)(Tombstones.compact(s, _, _, "doc_id")): Unit
           r
         }
         TextOps.winnowOverlapPairs(
-          TextOps.winnowLive(s, graft.core.Versions.currentPath(root).get, "doc_id"),
+          Tombstones.live(s, graft.core.Versions.currentPath(root).get, "doc_id"),
           "doc_id", minShared = 2, maxDf = 1000)
       },
       Some(s"""WITH $winnowCtes,

@@ -6,13 +6,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Sidecar
-import graft.pipeline.TextOps
+import graft.pipeline.{TextOps, Tombstones}
 
 /** Streaming ingestion into a published winnow fingerprint index —
   * the MOSS store's streaming leg, completing its lifecycle parity
   * with the other store families (LexStream postings, LmStream
   * counts, AnnStream vectors, DedupStream bands): publish → streamed
-  * O(batch) appends → marker takedowns ([[TextOps.winnowDeleteAt]]
+  * O(batch) appends → marker takedowns ([[Tombstones.delete]]
   * works on the streamed layout unchanged) → versioned compaction.
   *
   * Winnowing is per-doc pure ([[TextOps.winnow]] — WinnowIndexSpec
@@ -108,7 +108,7 @@ object WinnowStream {
     * under the store's normalized `id` column.
     */
   def live(spark: SparkSession, root: String): DataFrame =
-    TextOps.winnowLive(spark, indexPath(root), "id")
+    Tombstones.live(spark, indexPath(root), "id")
 
   /** Watch `srcDir` for document parquet files and ingest each
     * micro-batch into the store at `root` (published by [[publish]]

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, Tombstones}
 import graft.sources.Tables
 
 /** Incremental near-dup mining must equal the full re-mine restricted
@@ -43,11 +43,11 @@ class DedupIncrementalSpec extends GraftSuite {
     val path = graft.queries.SessionPublish.tempDir("bands-marked-inc") + "/bands"
     Dedup.bandTable(corpus0, "doc_id", col("text"))
       .write.mode("overwrite").parquet(path)
-    Dedup.bandTableDeleteAt(path,
+    Tombstones.delete(path,
       corpus0.filter(col("doc_id") % 5 === 0).select(col("doc_id")), "doc_id")
 
     val marked = pairSet(Dedup.nearDuplicatesIncremental(
-      survivors, Dedup.bandTableLive(spark, path), batch,
+      survivors, Tombstones.live(spark, path, "id"), batch,
       "doc_id", col("text"), 0.7))
     val republished = pairSet(Dedup.nearDuplicatesIncremental(
       survivors, Dedup.bandTable(survivors, "doc_id", col("text")), batch,
@@ -161,8 +161,8 @@ class DedupIncrementalSpec extends GraftSuite {
     val survivors = docs.filter(col("doc_id") % 5 =!= 0)
     def bandRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val deleted = Dedup.bandTableDelete(
-      Dedup.bandTable(docs, "doc_id", col("text")), tomb, "doc_id")
+    val deleted = Tombstones.without(
+      Dedup.bandTable(docs, "doc_id", col("text")), "id", tomb, "doc_id")
     assert(bandRows(deleted) ===
       bandRows(Dedup.bandTable(survivors, "doc_id", col("text"))),
       "anti-join must equal the from-scratch re-band bit-for-bit")
@@ -179,7 +179,7 @@ class DedupIncrementalSpec extends GraftSuite {
           Seq((1L, "dup"), (2L, "dup"), (3L, "only-tombstoned"), (4L, "solo")))
         .toDF("doc_id", "text"), "doc_id", col("text"))
     val kept = graft.pipeline.Dedup.exactKeepers(
-      graft.pipeline.Dedup.exactIndexDelete(full,
+      Tombstones.without(full, "id",
         spark.createDataFrame(Seq(Tuple1(1L), Tuple1(3L))).toDF("doc_id"), "doc_id"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val md5of = (s: String) => java.security.MessageDigest.getInstance("MD5")
@@ -209,21 +209,21 @@ class DedupIncrementalSpec extends GraftSuite {
 
     // order 1: delete (O(batch) tombstone markers) then compact
     val r1 = publishFull("dc")
-    Dedup.exactIndexDeleteAt(graft.core.Versions.currentPath(r1).get, tomb, "doc_id")
-    assert(keepers(Dedup.exactIndexLive(spark, graft.core.Versions.currentPath(r1).get))
+    Tombstones.delete(graft.core.Versions.currentPath(r1).get, tomb, "doc_id")
+    assert(keepers(Tombstones.live(spark, graft.core.Versions.currentPath(r1).get, "id"))
       === want, "pre-compact live read must already equal the survivor reindex")
-    Dedup.exactIndexCompactVersioned(spark, r1)
+    Tombstones.compactVersioned(spark, r1)(Tombstones.compact(spark, _, _, "id"))
     val v1 = graft.core.Versions.currentPath(r1).get
     assert(keepers(spark.read.parquet(v1)) === want,
       "delete-then-compact == survivor reindex (bare scan, no anti-join)")
-    assert(graft.pipeline.Tombstones.ids(spark, v1).isEmpty,
+    assert(Tombstones.ids(spark, v1).isEmpty,
       "the compacted layout must start tombstone-free")
 
     // order 2: compact first (a pure rewrite), then delete (markers pending)
     val r2 = publishFull("cd")
-    Dedup.exactIndexCompactVersioned(spark, r2)
-    Dedup.exactIndexDeleteAt(graft.core.Versions.currentPath(r2).get, tomb, "doc_id")
-    assert(keepers(Dedup.exactIndexLive(spark, graft.core.Versions.currentPath(r2).get))
+    Tombstones.compactVersioned(spark, r2)(Tombstones.compact(spark, _, _, "id"))
+    Tombstones.delete(graft.core.Versions.currentPath(r2).get, tomb, "doc_id")
+    assert(keepers(Tombstones.live(spark, graft.core.Versions.currentPath(r2).get, "id"))
       === want, "compact-then-delete == survivor reindex")
   }
 
@@ -245,20 +245,20 @@ class DedupIncrementalSpec extends GraftSuite {
     }
 
     val r1 = publishBands("dc") // delete then compact
-    Dedup.bandTableDeleteAt(graft.core.Versions.currentPath(r1).get, tomb, "doc_id")
-    assert(bandRows(Dedup.bandTableLive(spark, graft.core.Versions.currentPath(r1).get))
+    Tombstones.delete(graft.core.Versions.currentPath(r1).get, tomb, "doc_id")
+    assert(bandRows(Tombstones.live(spark, graft.core.Versions.currentPath(r1).get, "id"))
       === want, "pre-compact live view == survivor re-band")
-    Dedup.bandTableCompactVersioned(spark, r1)
+    Tombstones.compactVersioned(spark, r1)(Tombstones.compact(spark, _, _, "id"))
     val v1 = graft.core.Versions.currentPath(r1).get
     assert(bandRows(spark.read.parquet(v1)) === want,
       "delete-then-compact == survivor re-band (bare scan)")
-    assert(graft.pipeline.Tombstones.ids(spark, v1).isEmpty,
+    assert(Tombstones.ids(spark, v1).isEmpty,
       "compacted band layout starts tombstone-free")
 
     val r2 = publishBands("cd") // compact then delete
-    Dedup.bandTableCompactVersioned(spark, r2)
-    Dedup.bandTableDeleteAt(graft.core.Versions.currentPath(r2).get, tomb, "doc_id")
-    assert(bandRows(Dedup.bandTableLive(spark, graft.core.Versions.currentPath(r2).get))
+    Tombstones.compactVersioned(spark, r2)(Tombstones.compact(spark, _, _, "id"))
+    Tombstones.delete(graft.core.Versions.currentPath(r2).get, tomb, "doc_id")
+    assert(bandRows(Tombstones.live(spark, graft.core.Versions.currentPath(r2).get, "id"))
       === want, "compact-then-delete == survivor re-band")
   }
 

@@ -218,8 +218,8 @@ class TombstoneSpec extends GraftSuite {
     Tombstones.delete(src, Seq(3L).toDF("vec_id"), "vec_id")
     // compact with a takedown batch landing AFTER the scan ran but
     // BEFORE the pointer flip — the lost-delete window
-    Tombstones.compactVersionedRecheck(spark, root, src) { dst =>
-      Ivf.compactPartitioned(spark, src, dst, "vec_id")
+    Tombstones.compactVersioned(spark, root) { (live, dst) =>
+      Ivf.compactPartitioned(spark, live, dst, "vec_id")
       Tombstones.delete(src, Seq(11L, 29L).toDF("vec_id"), "vec_id"): Unit
     }
     val dst = graft.core.Versions.currentPath(root).get

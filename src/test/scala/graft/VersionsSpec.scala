@@ -78,6 +78,20 @@ class VersionsSpec extends GraftSuite {
     assert(Versions.current(root).contains(3L))
   }
 
+  test("versioned compacts on a root with nothing published raise and write no version") {
+    val root = newRoot()
+    val marker = intercept[IllegalArgumentException] {
+      graft.pipeline.Tombstones.compactVersioned(spark, root)((_, _) => fail("wrote"))
+    }
+    val coupled = intercept[IllegalArgumentException] {
+      graft.core.MaintLock.compactVersioned(root, "test")((_, _) => fail("wrote"))
+    }
+    Seq(marker, coupled).foreach(e =>
+      assert(e.getMessage.contains(root), s"the message must name the root: ${e.getMessage}"))
+    assert(Versions.versions(root).isEmpty, "no v= dir may be left behind")
+    assert(Versions.current(root).isEmpty)
+  }
+
   test("compactVersioned: deletes purge into the next version; the live flip is the swap") {
     import org.apache.spark.sql.functions._
     val emb = graft.sources.Tables(spark, sf001).embeddings
@@ -90,7 +104,8 @@ class VersionsSpec extends GraftSuite {
     val nDoomed = graft.pipeline.Tombstones.delete(v1, doomed, "vec_id")
     assert(nDoomed > 0)
 
-    val v2 = graft.pipeline.Ivf.compactVersioned(spark, root, "vec_id")
+    val v2 = graft.pipeline.Tombstones.compactVersioned(spark, root)(
+      graft.pipeline.Ivf.compactPartitioned(spark, _, _, "vec_id"))
     assert(v2 == 2L && Versions.current(root).contains(2L))
     val live = Versions.currentPath(root).get
     assert(spark.read.parquet(live).count() == emb.count() - nDoomed,

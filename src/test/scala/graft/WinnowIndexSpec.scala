@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.TextOps
+import graft.pipeline.{TextOps, Tombstones}
 
 /** Winnowing fingerprint index lifecycle (TextOps.winnow /
   * winnowMatches / winnowOverlapPairs): per-doc purity makes the
@@ -83,7 +83,7 @@ class WinnowIndexSpec extends GraftSuite {
     ).toDF("doc_id", "text")
     val index = TextOps.winnow(docs, "doc_id", col("text"), k = 3, w = 4)
     val tomb = Seq(Tuple1(4L)).toDF("doc_id")
-    val pruned = TextOps.winnowDelete(index, "doc_id", tomb)
+    val pruned = Tombstones.without(index, "doc_id", tomb, "doc_id")
     // delete == republish (per-doc purity), bit-for-bit
     val republished = TextOps.winnow(docs.filter(col("doc_id") =!= 4L), "doc_id",
       col("text"), k = 3, w = 4)
@@ -108,7 +108,7 @@ class WinnowIndexSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
     def readSet(path: String): Set[(Long, Long, String)] =
-      TextOps.winnowLive(spark, path, "doc_id")
+      Tombstones.live(spark, path, "doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
     def freshRoot(tag: String): String = {
@@ -123,11 +123,11 @@ class WinnowIndexSpec extends GraftSuite {
     // order 1: marker delete, pre-compact live view already correct,
     // then versioned compact purges rows + markers
     val r1 = freshRoot("dc")
-    TextOps.winnowDeleteAt(graft.core.Versions.currentPath(r1).get,
+    Tombstones.delete(graft.core.Versions.currentPath(r1).get,
       victims.toDF("doc_id"), "doc_id")
     assert(readSet(graft.core.Versions.currentPath(r1).get) === want,
       "pre-compact live view must equal the survivor re-winnow")
-    TextOps.winnowCompactVersioned(spark, r1, "doc_id")
+    Tombstones.compactVersioned(spark, r1)(Tombstones.compact(spark, _, _, "doc_id"))
     val live1 = graft.core.Versions.currentPath(r1).get
     assert(readSet(live1) === want, "delete-then-compact == survivor re-winnow")
     assert(!graft.core.Sidecar.exists(s"$live1/_tombstones"),
@@ -135,8 +135,8 @@ class WinnowIndexSpec extends GraftSuite {
 
     // order 2: compact first (pure rewrite), then marker delete
     val r2 = freshRoot("cd")
-    TextOps.winnowCompactVersioned(spark, r2, "doc_id")
-    TextOps.winnowDeleteAt(graft.core.Versions.currentPath(r2).get,
+    Tombstones.compactVersioned(spark, r2)(Tombstones.compact(spark, _, _, "doc_id"))
+    Tombstones.delete(graft.core.Versions.currentPath(r2).get,
       victims.toDF("doc_id"), "doc_id")
     assert(readSet(graft.core.Versions.currentPath(r2).get) === want,
       "compact-then-delete == survivor re-winnow")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Sidecar
-import graft.pipeline.TextOps
+import graft.pipeline.{TextOps, Tombstones}
 import graft.streaming.WinnowStream
 
 /** Streaming winnow-index ingestion: the streamed index equals a
@@ -103,7 +103,7 @@ class WinnowStreamSpec extends GraftSuite {
       "/tmp/nock", 0L, "doc_id", col("text"), WinnowStream.Params(k = 4, w = 4), root))
 
     // marker takedown on the streamed layout: live view == survivors
-    TextOps.winnowDeleteAt(WinnowStream.indexPath(root),
+    Tombstones.delete(WinnowStream.indexPath(root),
       docs.filter(col("doc_id") % 7 === 0).select(col("doc_id").as("id")), "id")
     assert(rowsOf(WinnowStream.live(spark, root)) ===
       oneShot(docs.filter(col("doc_id") % 7 =!= 0)),
@@ -115,7 +115,7 @@ class WinnowStreamSpec extends GraftSuite {
     WinnowStream.publish(docs.filter(col("doc_id") % 5 =!= 0),
       "doc_id", col("text"), params, root)
     // previous lifetime: a takedown and a committed stream batch
-    TextOps.winnowDeleteAt(WinnowStream.indexPath(root),
+    Tombstones.delete(WinnowStream.indexPath(root),
       docs.filter(col("doc_id") % 7 === 0).select(col("doc_id").as("id")), "id")
     val ckpt = java.nio.file.Files.createTempDirectory("winnow-repub-ckpt").toString
     assert(WinnowStream.appendBatch(spark, docs.filter(col("doc_id") % 5 === 0),
