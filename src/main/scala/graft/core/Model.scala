@@ -53,8 +53,8 @@ object Model {
     * atomic pointer write flips readers to it, so a crash mid-publish
     * can never lose or tear the previous base (the old
     * delete-then-overwrite had a window where names living only in
-    * the base were gone). Superseded versions and the legacy
-    * `dir/model` location are pruned only after the flip is durable.
+    * the base were gone). Superseded versions are pruned only after
+    * the flip is durable.
     */
   def write(model: DataFrame, dir: String): Unit = {
     // claim the target version EXCLUSIVELY before writing: two racing
@@ -77,7 +77,6 @@ object Model {
     // the flip: a lazily-executing reader that resolved basePath just
     // before it would FileNotFound mid-scan
     pruneBaseVersions(dir)
-    Sidecar.delete(s"$dir/model", recursive = true) // legacy location
   }
 
   /** Janitor for superseded base versions: delete `model_base/v<N>`
@@ -105,22 +104,14 @@ object Model {
   }
 
   /** The live base version: max over the monotone `current-v<N>`
-    * markers, plus the legacy rewritable `current` pointer (stores
-    * written before the marker scheme) — max of both never regresses.
+    * markers (a max over creates never regresses).
     */
-  private def currentBaseVersion(dir: String): Option[Long] = {
-    val markers = Sidecar.listNames(s"$dir/model_base")
-      .flatMap(parseSeq(_, "current-v"))
-    val legacy = Sidecar.readString(s"$dir/model_base/current").flatMap(_.trim.toLongOption)
-    (markers ++ legacy).maxOption
-  }
+  private def currentBaseVersion(dir: String): Option[Long] =
+    Sidecar.listNames(s"$dir/model_base").flatMap(parseSeq(_, "current-v")).maxOption
 
-  /** The live base parquet: the pointed-to version, else the legacy
-    * unversioned location (stores written before the versioned base).
-    */
+  /** The live base parquet: the pointed-to version. */
   private def basePath(dir: String): Option[String] =
     currentBaseVersion(dir).map(v => s"$dir/model_base/v$v").filter(Sidecar.exists)
-      .orElse(Some(s"$dir/model").filter(Sidecar.exists))
 
   /** The CURRENT dictionary: the base parquet plus every visible
     * get-or-create segment; base ids are read VERBATIM and segment

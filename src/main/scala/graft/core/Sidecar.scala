@@ -224,26 +224,15 @@ object Sidecar {
   }
 
   /** Acquire `lock` exclusively, breaking a STALE holder (a dead
-    * process's lock, mtime older than `horizonMs`) by RENAMING it to a
-    * unique tombstone first: a rename's source must exist at the
-    * instant of the move, so racing breakers get exactly one winner —
-    * check-mtime-then-delete would let a pair delete a stale lock AND
-    * a fresh replacement. The mtime is re-read immediately before the
-    * steal to shrink the fresh-lock-replaced-stale window to
-    * microseconds. Returns true iff THIS caller now holds the lock
-    * (release with [[delete]]); false means a live holder exists or
-    * the break race was lost — callers treat both as "someone else is
-    * doing the job".
-    */
-  def lockBreakingStale(lock: String, horizonMs: Long): Boolean =
-    acquireLock(lock, horizonMs).isDefined
-
-  /** [[lockBreakingStale]] returning an OWNERSHIP nonce: the nonce IS
-    * the lock file's content, written atomically with the claim
-    * ([[createExclusiveWithContent]]), so ownership has no separate
-    * owner-file whose stamp could race the claim (a pre-claim stamp
-    * can land AFTER a competing winner's and hijack its release; a
-    * post-claim stamp leaves a window where the winner is
+    * process's lock, mtime older than `horizonMs`; see the steal rule
+    * below). Returns an OWNERSHIP nonce iff THIS caller now holds the
+    * lock; None means a live holder exists or the break race was lost
+    * — callers treat both as "someone else is doing the job". The
+    * nonce IS the lock file's content, written atomically with the
+    * claim ([[createExclusiveWithContent]]), so ownership has no
+    * separate owner-file whose stamp could race the claim (a pre-claim
+    * stamp can land AFTER a competing winner's and hijack its release;
+    * a post-claim stamp leaves a window where the winner is
     * unreleasable). Release with [[releaseLock]], whose rename-based
     * check-and-remove has exactly one winner per lock incarnation —
     * a holder that outlived the staleness horizon and got broken can
@@ -266,11 +255,7 @@ object Sidecar {
         // fresh-lock-replaced-stale window to microseconds.
         val tomb = s"$lock-broken-${java.util.UUID.randomUUID().toString.take(8)}"
         if (!staleNow || !rename(lock, tomb)) None
-        else {
-          delete(tomb)
-          delete(s"$lock.owner") // legacy pre-r13 owner sidecar, if any
-          claim()
-        }
+        else { delete(tomb); claim() }
       }
     }
   }

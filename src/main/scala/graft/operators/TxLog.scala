@@ -33,13 +33,14 @@ import graft.core.Sidecar
   *    [[purgedAbort]];
   *  - `lease-ms` — the store-level resolve lease
   *    ([[setResolveLeaseMs]]);
-  *  - `watermark` — every tx `<= w` is RESOLVED (committed or
+  *  - `watermark-<w>` — every tx `<= w` is RESOLVED (committed or
   *    aborted); committed means `<= w` and not in the abort list
-  *    ([[compact]] folds the contiguous resolved prefix here and
-  *    deletes the commit/alloc markers — the xmin-horizon trick, so
-  *    the live marker set stays bounded by the IN-FLIGHT window, not
-  *    history: at 100 TB the predicate is one `<=` plus `isin`s over
-  *    recent ids and the abort list, never a billion-row set).
+  *    ([[compact]] folds the contiguous resolved prefix into a new
+  *    marker and deletes the commit/alloc markers — the xmin-horizon
+  *    trick, so the live marker set stays bounded by the IN-FLIGHT
+  *    window, not history: at 100 TB the predicate is one `<=` plus
+  *    `isin`s over recent ids and the abort list, never a billion-row
+  *    set). Readers take the max `w` over these markers.
   *
   * Abort markers cannot be horizon-folded like commit markers: a
   * rolled-back transaction may have already APPENDED versions stamped
@@ -71,19 +72,12 @@ object TxLog {
     * HDFS-class stores during which a reader would see watermark=0 and
     * every folded commit as uncommitted — a store-wide transient
     * visibility collapse. Marker creates have no such window, and the
-    * max over creates can never regress. The legacy rewritable
-    * `watermark` file (pre-r12 stores) is still read — it is never
-    * written again, so its replacement window is gone too.
+    * max over creates can never regress.
     */
-  def watermark(dir: String): Long = watermarkFrom(dir, Sidecar.listNames(txDir(dir)))
+  def watermark(dir: String): Long = watermarkFrom(Sidecar.listNames(txDir(dir)))
 
-  private def watermarkFrom(dir: String, names: Seq[String]): Long = {
-    val legacy =
-      if (names.contains("watermark"))
-        Sidecar.readString(s"${txDir(dir)}/watermark").flatMap(_.trim.toLongOption)
-      else None
-    (idsByPrefix(names, "watermark-") ++ legacy :+ 0L).max
-  }
+  private def watermarkFrom(names: Seq[String]): Long =
+    (idsByPrefix(names, "watermark-") :+ 0L).max
 
   /** Allocate a fresh tx id: claim max-known + 1 by exclusive marker
     * create, retrying upward on collision — two concurrent sessions
@@ -99,7 +93,7 @@ object TxLog {
     var id = {
       val names = Sidecar.listNames(txDir(dir))
       (idsByPrefix(names, "alloc-") ++ idsByPrefix(names, "commit-") ++
-        idsByPrefix(names, "abort-") :+ watermarkFrom(dir, names)).max + 1
+        idsByPrefix(names, "abort-") :+ watermarkFrom(names)).max + 1
     }
     while ({
       while (!Sidecar.createExclusive(s"${txDir(dir)}/alloc-$id")) id += 1
@@ -323,7 +317,7 @@ object TxLog {
           math.max(horizonMs, resolveLeaseMs(dir))
         if (outcomeOf(dir, id).isEmpty && claimAge.exists(_ < leaseCutoff)) {
           // re-read the staleness IMMEDIATELY before the steal (the
-          // lockBreakingStale rule): between the check above and the
+          // acquireLock rule): between the check above and the
           // rename, another janitor can steal the stale claim and a
           // live resolver re-create a FRESH one — stealing that would
           // break the lease invariant for a resolver that violated
@@ -362,7 +356,7 @@ object TxLog {
     // direction (a recent id the watermark also covers) stays correct
     // under the OR in committedColumn/isCommitted.
     val names = Sidecar.listNames(txDir(dir))
-    val w = watermarkFrom(dir, names)
+    val w = watermarkFrom(names)
     (w, idsByPrefix(names, "commit-").filter(_ > w).toSet)
   }
 
@@ -430,7 +424,7 @@ object TxLog {
     val nonce = Sidecar.acquireLock(lock, lockHorizonMs).getOrElse(return)
     try {
       val names = Sidecar.listNames(txDir(dir))
-      val w0 = watermarkFrom(dir, names)
+      val w0 = watermarkFrom(names)
       val resolved = (idsByPrefix(names, "commit-") ++ idsByPrefix(names, "abort-"))
         .filter(_ > w0).distinct.sorted
       var w = w0
@@ -445,11 +439,6 @@ object TxLog {
       if (wFinal > 0) Sidecar.createExclusive(s"${txDir(dir)}/watermark-$wFinal"): Unit
       idsByPrefix(names, "watermark-").filter(_ < wFinal)
         .foreach(v => Sidecar.delete(s"${txDir(dir)}/watermark-$v"))
-      // migrate the legacy rewritable file only once a covering marker
-      // exists (created just above — wFinal >= the legacy value by
-      // construction); deleting it without one would lose the watermark
-      if (names.contains("watermark") && wFinal > 0)
-        Sidecar.delete(s"${txDir(dir)}/watermark")
       idsByPrefix(names, "commit-").filter(_ <= wFinal)
         .foreach(id => Sidecar.delete(s"${txDir(dir)}/commit-$id"))
       idsByPrefix(names, "alloc-").filter(_ <= wFinal)

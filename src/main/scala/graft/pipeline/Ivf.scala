@@ -153,29 +153,11 @@ object Ivf {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
-  // Sidecar I/O goes through [[graft.core.Sidecar]] (Hadoop
-  // FileSystem API), so hdfs:// and s3a:// layouts publish and verify
-  // exactly like file: paths.
+  // The layout's one geometry sidecar (`fingerprint`, `mean_dist`),
+  // written by writePartitioned. Sidecar I/O goes through
+  // [[graft.core.Sidecar]] (Hadoop FileSystem API), so hdfs:// and
+  // s3a:// layouts publish and verify exactly like file: paths.
   private def metaPath(path: String) = s"$path/_ivf_meta.properties"
-
-  // the pre-r7 sidecar: a bare fingerprint file. Layouts are
-  // append-forever artifacts that outlive code revisions, so the old
-  // form must keep verifying appends (fingerprint honored; no
-  // publish-time dispersion was recorded, so drift baselines default
-  // to the batch's own mean until the layout is republished).
-  private def legacyFingerprintPath(path: String) = s"$path/_ivf_centroids.sha"
-
-  /** Sidecar contents: at least `fingerprint`, plus `mean_dist` for
-    * layouts published since the dispersion baseline existed. Read
-    * with bounded retry ([[graft.core.Sidecar.readPropsExpected]]) so
-    * a republish-in-flight (delete→rename on filesystems without
-    * atomic replace) never surfaces as a spurious "no sidecar".
-    */
-  private def readMeta(path: String): Option[Map[String, String]] =
-    graft.core.Sidecar.readProps(metaPath(path))
-      .orElse(graft.core.Sidecar.readString(legacyFingerprintPath(path))
-        .map(s => Map("fingerprint" -> s.trim)))
-      .orElse(graft.core.Sidecar.readPropsExpected(metaPath(path)))
 
   /** Mean squared distance of each vector to its assigned centroid —
     * the layout's publish-time dispersion, the yardstick appends are
@@ -214,6 +196,33 @@ object Ivf {
       Seq("fingerprint" -> fingerprint(index), "mean_dist" -> mean.toString))
   }
 
+  /** Verify the layout's sidecar matches `index` (guards the
+    * documented failure mode: retraining after drift and then
+    * APPENDING with the new index would mix two cell geometries in
+    * one layout — probes at nprobe < nlist silently lose recall) and
+    * return its publish-time `mean_dist`, the drift baseline. A
+    * MISSING sidecar, or one without `mean_dist`, is equally an error
+    * (nothing proves the layout and the index agree), not a skipped
+    * check. The read retries boundedly
+    * ([[graft.core.Sidecar.readPropsExpected]]) so a
+    * republish-in-flight (delete→rename on filesystems without atomic
+    * replace) never surfaces as a spurious "no sidecar".
+    */
+  private def checkLayout(path: String, index: IvfIndex): Double = {
+    val meta = graft.core.Sidecar.readPropsExpected(metaPath(path))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no IVF metadata sidecar at ${metaPath(path)}: the layout was not published by " +
+          "writePartitioned (or the sidecar was lost) — republish with " +
+          "writePartitioned; appending unverified would risk mixing cell geometries"))
+    require(meta.get("fingerprint").contains(fingerprint(index)),
+      s"IVF index mismatch: layout at $path was published with centroids " +
+        s"${meta.getOrElse("fingerprint", "?")} but the append uses ${fingerprint(index)} — " +
+        "after a retrain, republish with writePartitioned instead of appending")
+    meta.get("mean_dist").map(_.toDouble).getOrElse(throw new IllegalArgumentException(
+      s"IVF metadata sidecar at ${metaPath(path)} has no mean_dist: the layout " +
+        "was not published by writePartitioned — republish with writePartitioned"))
+  }
+
   /** Append a batch to a published cell-partitioned corpus WITHOUT
     * retraining or rewriting: assign the batch with the SAME
     * base-trained centroids and append its files into the matching
@@ -224,37 +233,11 @@ object Ivf {
     * [[IvfDrift]] says when to retrain + republish, exactly like
     * periodic delta compaction.
     */
-  /** Verify the layout's sidecar matches `index` (guards the
-    * documented failure mode: retraining after drift and then
-    * APPENDING with the new index would mix two cell geometries in
-    * one layout — probes at nprobe < nlist silently lose recall). A
-    * MISSING sidecar is equally an error (nothing proves the layout
-    * and the index agree), not a skipped check.
-    */
-  private def checkLayout(path: String, index: IvfIndex): Map[String, String] = {
-    val meta = readMeta(path).getOrElse(throw new IllegalArgumentException(
-      s"no IVF metadata sidecar at ${metaPath(path)} (nor the legacy " +
-        s"${legacyFingerprintPath(path)}): the layout was not published by " +
-        "writePartitioned (or the sidecar was lost) — republish with " +
-        "writePartitioned; appending unverified would risk mixing cell geometries"))
-    require(meta.get("fingerprint").contains(fingerprint(index)),
-      s"IVF index mismatch: layout at $path was published with centroids " +
-        s"${meta.getOrElse("fingerprint", "?")} but the append uses ${fingerprint(index)} — " +
-        "after a retrain, republish with writePartitioned instead of appending")
-    meta
-  }
-
-  private def driftOf(meta: Map[String, String], batchMean: Double): IvfDrift =
-    // legacy layouts recorded no publish-time dispersion: baseline to
-    // the batch's own mean (ratio 1, never trips) rather than 0
-    // (ratio +Inf, always trips) — republish to get a real baseline
-    IvfDrift(meta.get("mean_dist").map(_.toDouble).getOrElse(batchMean), batchMean)
-
   def appendPartitioned(newEmb: DataFrame, vecCol: String, index: IvfIndex, path: String): IvfDrift = {
-    val meta = checkLayout(path, index)
+    val baseMean = checkLayout(path, index)
     newEmb.withColumn("cell", assign(col(vecCol), index))
       .write.mode("append").partitionBy("cell").parquet(path)
-    driftOf(meta, meanAssignedDist(newEmb, vecCol, index))
+    IvfDrift(baseMean, meanAssignedDist(newEmb, vecCol, index))
   }
 
   /** Transactional half of [[appendPartitioned]]: assign + write the
@@ -266,10 +249,10 @@ object Ivf {
     */
   def stagePartitioned(newEmb: DataFrame, vecCol: String, index: IvfIndex,
       layoutPath: String, stagingPath: String): IvfDrift = {
-    val meta = checkLayout(layoutPath, index)
+    val baseMean = checkLayout(layoutPath, index)
     newEmb.withColumn("cell", assign(col(vecCol), index))
       .write.mode("overwrite").partitionBy("cell").parquet(stagingPath)
-    driftOf(meta, meanAssignedDist(newEmb, vecCol, index))
+    IvfDrift(baseMean, meanAssignedDist(newEmb, vecCol, index))
   }
 
   /** Move staged cell files into the live layout (atomic per-file
@@ -314,18 +297,15 @@ object Ivf {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", Tombstones.compactRecordsPerFile)
       .partitionBy("cell").parquet(dstPath)
-    // geometry sidecars (either kind, plus the legacy bare fingerprint)
-    Seq("_ivf_meta.properties", "_ivfpq_meta.properties", "_ivf_centroids.sha")
-      .foreach { name =>
-        graft.core.Sidecar.readString(s"$srcPath/$name")
-          .foreach(graft.core.Sidecar.writeString(s"$dstPath/$name", _))
-      }
-    // streaming append markers: per-key files + the legacy line file
+    // geometry sidecar (either kind)
+    Seq("_ivf_meta.properties", "_ivfpq_meta.properties").foreach { name =>
+      graft.core.Sidecar.readString(s"$srcPath/$name")
+        .foreach(graft.core.Sidecar.writeString(s"$dstPath/$name", _))
+    }
+    // streaming append markers: one file per applied batch key
     graft.core.Sidecar.listNames(s"$srcPath/_ivf_applied").foreach { key =>
       graft.core.Sidecar.writeString(s"$dstPath/_ivf_applied/$key", "")
     }
-    graft.core.Sidecar.readString(s"$srcPath/_ivf_applied_batches")
-      .foreach(graft.core.Sidecar.writeString(s"$dstPath/_ivf_applied_batches", _))
   }
 
   /** Search over a published cell-partitioned corpus. The probe-cell

@@ -348,21 +348,17 @@ object Retrieval {
       .option("maxRecordsPerFile", Tombstones.compactRecordsPerFile)
       .partitionBy("tb").parquet(postingsPath(dstPath))
     // doclens REBUILT from the union of the surviving source sidecars
-    // (base + streamed trees, tombstones anti-joined out) and the live
-    // postings: the sidecars contribute ZERO-TOKEN docs (counted in
+    // (base + streamed trees, tombstones anti-joined out), not from the
+    // postings: the sidecars also carry ZERO-TOKEN docs (counted in
     // n/Σdl but owning no postings rows — a postings-only rebuild
     // would turn their post-compact deletes into counter-leaking
-    // no-ops), the postings heal ids no sidecar ever saw
-    // (pre-sidecar layouts); dl values agree wherever both sources
-    // carry an id, so max() is pure dedup
-    val srcLens = Seq(doclensPath(srcPath), doclensStreamDir(srcPath))
+    // no-ops); every writer records each doc's dl there, and max()
+    // dedups a base/stream overlap
+    val lens = Seq(doclensPath(srcPath), doclensStreamDir(srcPath))
       .filter(graft.core.Sidecar.listNames(_).nonEmpty)
       .map(spark.read.parquet(_).select(col("id"), col("dl")))
-    val sideLens = srcLens.reduceOption(_ unionByName _)
-      .map(u => readTombstones(spark, srcPath)
-        .fold(u)(t => u.join(t, Seq("id"), "left_anti")))
-    val postLens = live.select(col("id"), col("dl"))
-    sideLens.fold(postLens)(_ unionByName postLens)
+      .reduce(_ unionByName _)
+    readTombstones(spark, srcPath).fold(lens)(t => lens.join(t, Seq("id"), "left_anti"))
       .groupBy(col("id")).agg(max(col("dl")).as("dl"))
       .withColumn("db", pmod(col("id"), lit(meta("buckets").toLong)))
       .repartition(col("db"))
@@ -411,8 +407,7 @@ object Retrieval {
     * correction never rescans postings, and the dl LOOKUP is a
     * bucket-pruned read of the [[doclensPath]] sidecar — O(victim
     * batch), the whole takedown never touches the index
-    * ([[victimDls]]; only ids the sidecar has never seen fall back to
-    * a postings scan). A republish folds tombstones away.
+    * ([[victimDls]]). A republish folds tombstones away.
     *
     * The (marker, counter) pair makes this a COUPLED write: it runs
     * under the store's maintenance lock and raises
@@ -445,18 +440,15 @@ object Retrieval {
       s"n=${-fresh.size}\nsum_dl=${-fresh.map(dls(_)).sum}\n")
   }
 
-  /** (id -> dl) for the victim ids. The common path is a PRUNED read
-    * of the [[doclensPath]] sidecar — and, when streamed batches have
-    * landed since the last compact, of the batch-keyed
-    * [[doclensStreamDir]] trees: in BOTH only the victims' `db`
-    * partitions are listed and read (LexDeleteSpec pins
-    * selectedPartitions on each), so a takedown batch costs O(batch)
-    * regardless of index size, for batch-published AND streamed-in
-    * documents alike. Only ids neither sidecar carries — a
-    * pre-sidecar layout — fall back to ONE pushed-filter postings
-    * scan for just those ids (the pre-r15 cost, now genuinely
-    * exceptional). Genuinely unseen ids appear in no source and stay
-    * no-ops.
+  /** (id -> dl) for the victim ids: a PRUNED read of the
+    * [[doclensPath]] sidecar and of the batch-keyed
+    * [[doclensStreamDir]] trees (streamed batches since the last
+    * compact). In both only the victims' `db` partitions are listed
+    * and read (LexDeleteSpec pins selectedPartitions on each), so a
+    * takedown batch costs O(batch) regardless of index size, for
+    * batch-published AND streamed-in documents alike. Every writer
+    * records each doc's dl in one of the two, so an id neither
+    * carries is unseen and stays a no-op.
     */
   private[graft] def victimDls(spark: SparkSession, path: String,
       ids: Seq[Long]): Map[Long, Long] = {
@@ -468,13 +460,7 @@ object Retrieval {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // streamed rows are id-disjoint from the base (append contract),
     // so the maps never disagree on a key
-    val fromLens = pruned(doclensPath(path)) ++ pruned(doclensStreamDir(path))
-    val missing = ids.filterNot(fromLens.contains)
-    if (missing.isEmpty) fromLens
-    else fromLens ++ spark.read.parquet(postingsPath(path))
-      .filter(col("id").isin(missing: _*))
-      .groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    pruned(doclensPath(path)) ++ pruned(doclensStreamDir(path))
   }
 
   /** The pruned doclens lookup plan over either sidecar root — the
@@ -495,13 +481,15 @@ object Retrieval {
     * `autoBroadcastJoinThreshold` (ops commonly set it to -1, which
     * without a hint would shuffle the corpus-scale postings by id for
     * a KB-sized marker set); an oversized backlog loses the hint and
-    * degrades to a shuffle join instead of OOMing the driver.
+    * degrades to a shuffle join instead of OOMing the driver. Read
+    * from the listed batch files, like [[Tombstones.ids]].
     */
-  private[graft] def readTombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (graft.core.Sidecar.listNames(lexTombstonesPath(path)).isEmpty) None
+  private[graft] def readTombstones(spark: SparkSession, path: String): Option[DataFrame] = {
+    val files = graft.core.Sidecar.dataFiles(lexTombstonesPath(path))
+    if (files.isEmpty) None
     else Some(Tombstones.hintSized(
-      spark.read.parquet(s"${lexTombstonesPath(path)}/*").select(col("id")),
-      lexTombstonesPath(path)))
+      spark.read.parquet(files: _*).select(col("id")), lexTombstonesPath(path)))
+  }
 
   /** Postings of `path` pruned to `tbs` buckets and `terms`, with
     * tombstoned docs anti-joined out (tombstone-sized, broadcast

@@ -90,12 +90,14 @@ object Tombstones {
 
   /** The layout's deleted-id set as a single-column (`id` LONG) frame,
     * or None when no tombstone batch exists (the common case — callers
-    * skip the join entirely, leaving the scan plan untouched).
+    * skip the join entirely, leaving the scan plan untouched). Read
+    * from the listed batch files, never from the `_`-named root:
+    * Spark drops (and warns about) a root path whose name starts
+    * with `_`.
     */
   def ids(spark: SparkSession, layoutPath: String): Option[DataFrame] = {
-    val dir = tombDir(layoutPath)
-    if (Sidecar.listNames(dir).isEmpty) None
-    else Some(spark.read.option("recursiveFileLookup", "true").parquet(dir))
+    val files = Sidecar.dataFiles(tombDir(layoutPath))
+    if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
   }
 
   /** Bound under which a marker set gets a hard `broadcast()` hint

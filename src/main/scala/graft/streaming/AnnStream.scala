@@ -51,31 +51,15 @@ import graft.pipeline.Ivf
   */
 object AnnStream {
 
-  // pre-r8 marker: one shared line file. Append-forever layouts
-  // published by earlier revisions must keep deduping, so its keys
-  // are still honored on read; new markers are per-key files.
-  private def legacyAppliedPath(layout: String) = s"$layout/_ivf_applied_batches"
   private def markerDir(layout: String)  = s"$layout/_ivf_applied"
   private def stagingDir(layout: String) = s"$layout/_ivf_staging"
 
-  /** (checkpoint-token, batch-id) keys already appended to the layout
-    * (union of legacy line-file keys and per-key marker files).
+  /** (checkpoint-token, batch-id) keys already appended to the layout:
+    * one per `_ivf_applied/` marker file.
     */
-  def appliedBatches(layout: String): Set[String] = {
-    val legacy = Sidecar.readString(legacyAppliedPath(layout))
-      .map(_.linesIterator.filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-    legacy ++ Sidecar.listNames(markerDir(layout)).map(fileToKey)
-  }
+  def appliedBatches(layout: String): Set[String] =
+    Sidecar.listNames(markerDir(layout)).map(StagedCommit.fileToKey).toSet
 
-  private def fileToKey(name: String): String = StagedCommit.fileToKey(name)
-
-  /** One micro-batch under the staged commit protocol above. Returns
-    * the drift report, or None for a replay — including the
-    * crashed-after-marker case, where the retry's only job is to
-    * finish moving the staged files in (the drift was observable in
-    * the crashed attempt; recomputing it here would re-scan the batch
-    * for a number nobody is waiting on).
-    */
   /** The staged commit protocol, layout-kind-agnostic: `stage` writes
     * the batch's cell-partitioned files into the given staging dir
     * (invisible); the marker then commits, and the promote makes the
@@ -86,10 +70,15 @@ object AnnStream {
   private def committed[A](layoutPath: String, checkpointDir: String,
       batchId: Long)(stage: String => A): Option[A] =
     StagedCommit.run(markerDir(layoutPath), stagingDir(layoutPath), layoutPath,
-      checkpointDir, batchId,
-      alsoApplied = key => Sidecar.readString(legacyAppliedPath(layoutPath))
-        .exists(_.linesIterator.contains(key)))(stage)
+      checkpointDir, batchId)(stage)
 
+  /** One micro-batch under the staged commit protocol above. Returns
+    * the drift report, or None for a replay — including the
+    * crashed-after-marker case, where the retry's only job is to
+    * finish moving the staged files in (the drift was observable in
+    * the crashed attempt; recomputing it here would re-scan the batch
+    * for a number nobody is waiting on).
+    */
   def appendBatch(batch: org.apache.spark.sql.DataFrame, checkpointDir: String,
       batchId: Long, vecCol: String, index: Ivf.IvfIndex,
       layoutPath: String): Option[Ivf.IvfDrift] =

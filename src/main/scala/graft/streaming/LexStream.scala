@@ -27,9 +27,8 @@ import graft.pipeline.{Retrieval, TextOps}
   * LexStreamSpec-pinned. A republish folds counters away. The
   * batch's (id, dl) doclens rows land under the same batch-keyed
   * discipline ([[Retrieval.doclensStreamDir]]), so takedowns of
-  * streamed-in docs stay bucket-pruned ([[Retrieval.victimDls]])
-  * instead of falling back to a postings scan; a compact folds the
-  * trees into the rebuilt base sidecar.
+  * streamed-in docs stay bucket-pruned ([[Retrieval.victimDls]]);
+  * a compact folds the trees into the rebuilt base sidecar.
   *
   * Batches must be id-disjoint from the published corpus (the
   * append-family contract); single-writer per root, concurrent
@@ -93,8 +92,9 @@ object LexStream {
       // (`bk=<key>/db=<id bucket>/`): a replay OVERWRITES the same
       // directory with the same bytes — idempotent like the counter
       // file — and the db partitioning keeps takedown dl lookups of
-      // streamed-in docs bucket-pruned (Retrieval.victimDls), closing
-      // the postings-scan fallback for streaming-heavy deployments
+      // streamed-in docs bucket-pruned (Retrieval.victimDls), which
+      // read only the doclens sidecars: a streamed doc whose rows are
+      // missing here could not be taken down
       // (an all-empty batch writes nothing: a bk tree holding zero
       // parquet files would break schema inference on the stream root)
       if (dn > 0)

@@ -39,18 +39,17 @@ private[streaming] object StagedCommit {
   def fileToKey(name: String): String = name.replace('_', ':')
 
   /** One micro-batch under the protocol above. `stage` writes the
-    * batch's output as subdirectories of the given staging dir;
-    * `alsoApplied` folds in any legacy marker scheme. Returns None
-    * for a replay — including the crashed-after-marker case, where
-    * the retry's only job is to finish moving the staged files in.
+    * batch's output as subdirectories of the given staging dir; the
+    * batch counts as applied iff its own marker file exists. Returns
+    * None for a replay — including the crashed-after-marker case,
+    * where the retry's only job is to finish moving the staged files
+    * in.
     */
   def run[A](markerDir: String, stagingRoot: String, promoteInto: String,
-      checkpointDir: String, batchId: Long,
-      alsoApplied: String => Boolean = _ => false)(stage: String => A): Option[A] = {
-    val key = batchKey(checkpointDir, batchId)
-    val keyFile = keyToFile(key)
+      checkpointDir: String, batchId: Long)(stage: String => A): Option[A] = {
+    val keyFile = keyToFile(batchKey(checkpointDir, batchId))
     val staging = s"$stagingRoot/$keyFile"
-    if (Sidecar.exists(s"$markerDir/$keyFile") || alsoApplied(key)) {
+    if (Sidecar.exists(s"$markerDir/$keyFile")) {
       // crashed between marker and promote: complete the move
       Sidecar.promoteTree(staging, promoteInto)
       None

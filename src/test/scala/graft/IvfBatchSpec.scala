@@ -164,35 +164,6 @@ class IvfBatchSpec extends GraftSuite {
     }
   }
 
-  test("appendPartitioned honors the pre-r7 bare-fingerprint sidecar (legacy layouts)") {
-    val base  = emb.filter(col("vec_id") % 5 =!= 0)
-    val batch = emb.filter(col("vec_id") % 5 === 0)
-    val idx = Ivf.train(spark, base, "vec_id", "embedding", nlist = 8)
-    val path = java.nio.file.Files.createTempDirectory("ivf-legacy").toString
-    Ivf.writePartitioned(base, "embedding", idx, path)
-    // degrade the layout to the round-6 sidecar form: bare fingerprint
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, "_ivf_meta.properties"))
-    val fp = meta.linesIterator.collectFirst {
-      case l if l.startsWith("fingerprint=") => l.stripPrefix("fingerprint=") }.get
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_ivf_meta.properties"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_ivf_centroids.sha"), fp)
-
-    // append still verifies via the legacy fingerprint (no forced
-    // republish of an append-forever artifact)...
-    val drift = Ivf.appendPartitioned(batch, "embedding", idx, path)
-    // ...and the unknown publish-time baseline defaults to ratio 1
-    // (never trips), not +Inf (always trips)
-    assert(drift.ratio == 1.0 && !drift.drifted(),
-      s"legacy layout without a recorded baseline must not false-trip: $drift")
-    // a mismatched index still fails through the legacy path
-    val other = Ivf.IvfIndex(idx.centroids.map(_.map(_ + 1.0f)))
-    val e = intercept[IllegalArgumentException](
-      Ivf.appendPartitioned(batch, "embedding", other, path))
-    assert(e.getMessage.contains("IVF index mismatch"), e.getMessage)
-  }
-
   test("appendPartitioned refuses a layout without a metadata sidecar") {
     val idx = Ivf.train(spark, emb, "vec_id", "embedding", nlist = 4)
     val path = java.nio.file.Files.createTempDirectory("ivf-nosidecar").toString

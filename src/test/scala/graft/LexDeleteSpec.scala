@@ -86,21 +86,6 @@ class LexDeleteSpec extends GraftSuite {
     assert(got === want)
   }
 
-  test("ids absent from doclens fall back to the postings scan (streamed-in docs)") {
-    val root = graft.queries.SessionPublish.tempDir("lexdel-fallback") + "/idx"
-    Retrieval.publishIndex(docs, "doc_id", col("text"), root, buckets = 8)
-    // simulate a pre-sidecar layout / streamed-only ids: drop doclens
-    graft.core.Sidecar.delete(s"$root/doclens", recursive = true)
-    val victims = Retrieval.searchIndex(spark, root, terms, 3)
-      .select("id").as[Long].collect().toSeq
-    Retrieval.deleteDocs(spark, root, victims)
-    val clean = graft.queries.SessionPublish.tempDir("lexdel-fallback-clean") + "/idx"
-    Retrieval.publishIndex(docs.filter(!col("doc_id").isin(victims: _*)),
-      "doc_id", col("text"), clean, buckets = 8)
-    assert(bm25(root) === bm25(clean),
-      "the fallback path must still equal a republish without the victims")
-  }
-
   test("a post-compact takedown uses the rebuilt doclens and stays exact") {
     val r = graft.queries.SessionPublish.tempDir("lexdel-postcompact")
     var first: Seq[Long] = Nil
@@ -156,7 +141,7 @@ class LexDeleteSpec extends GraftSuite {
       "the streamed dl lookup must read only the victims' id buckets")
     assert(scans.forall(_.selectedPartitions.partitionCount < total),
       s"must prune: $total stream doclens buckets exist")
-    // and victimDls resolves them WITHOUT the postings fallback
+    // and victimDls resolves them from the stream sidecar
     assert(Retrieval.victimDls(spark, root, victims).keySet === victims.toSet)
 
     // the takedown itself stays exact: delete == republish-without
@@ -187,6 +172,46 @@ class LexDeleteSpec extends GraftSuite {
     Retrieval.publishIndex(docs, "doc_id", col("text"), clean, buckets = 8)
     assert(bm25(live) === bm25(clean),
       "post-compact delete of the empty doc must equal a republish without it")
+  }
+
+  test("every writer keeps doclens ∪ doclens_stream equal to the postings' (id, max dl)") {
+    // the takedown dl lookup reads ONLY the two doclens sidecars, so
+    // each writer must record exactly the (id, dl) rows its postings hold
+    def lens(root: String): Seq[(Long, Long)] =
+      Seq(s"$root/doclens", s"$root/doclens_stream")
+        .filter(graft.core.Sidecar.listNames(_).nonEmpty)
+        .map(spark.read.parquet(_).select(col("id"), col("dl")))
+        .reduce(_ unionByName _)
+        .as[(Long, Long)].collect().toSeq.sorted
+    def postingsLens(root: String): Seq[(Long, Long)] =
+      spark.read.parquet(s"$root/postings")
+        .groupBy(col("id")).agg(max(col("dl")).as("dl"))
+        .as[(Long, Long)].collect().toSeq.sorted
+    def check(root: String, step: String): Unit = {
+      val (got, want) = (lens(root), postingsLens(root))
+      val (missing, extra) = (want.diff(got), got.diff(want))
+      assert(want.nonEmpty && missing.isEmpty && extra.isEmpty,
+        s"after $step: doclens lacks ${missing.size} rows (${missing.take(3)}), " +
+          s"holds ${extra.size} extra (${extra.take(3)})")
+    }
+    val part = (k: Int) => docs.filter(col("doc_id") % 3 === k)
+    val r = graft.queries.SessionPublish.tempDir("lexdel-invariant")
+    graft.core.Versions.publish(r) { v1 =>
+      Retrieval.publishIndex(part(0), "doc_id", col("text"), v1, buckets = 8)
+    }
+    val v1 = graft.core.Versions.currentPath(r).get
+    check(v1, "publishIndex")
+    Retrieval.appendIndex(part(1), "doc_id", col("text"), v1)
+    check(v1, "appendIndex")
+    val ckpt = graft.queries.SessionPublish.tempDir("lexdel-invariant-ckpt")
+    assert(graft.streaming.LexStream.appendBatch(spark, part(2), ckpt, 0L,
+      "doc_id", col("text"), v1).nonEmpty, "the batch must commit")
+    check(v1, "a LexStream batch")
+    Retrieval.compactIndexVersioned(spark, r)
+    val v2 = graft.core.Versions.currentPath(r).get
+    assert(v2 != v1)
+    check(v2, "compactIndexVersioned")
+    assert(lens(v2).map(_._1) === docs.select("doc_id").as[Long].collect().toSeq.sorted)
   }
 
   test("no tombstones -> no anti-join in the read plan") {

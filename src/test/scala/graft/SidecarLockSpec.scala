@@ -65,20 +65,6 @@ class SidecarLockSpec extends GraftSuite {
     assert(!Sidecar.exists(lock))
   }
 
-  test("fresh lock is never broken; legacy .owner sidecar is swept on a break") {
-    val lock = tmpLock()
-    val holder = Sidecar.acquireLock(lock, 60000).get
-    assert(Sidecar.acquireLock(lock, 60000).isEmpty)
-    // simulate a pre-r13 store: an orphaned owner file beside a stale lock
-    Sidecar.writeString(s"$lock.owner", "legacy")
-    backdate(lock, 120000)
-    val breaker = Sidecar.acquireLock(lock, 60000).get
-    assert(!Sidecar.exists(s"$lock.owner"), "legacy owner sidecar swept")
-    Sidecar.releaseLock(lock, holder)  // zombie: no-op
-    Sidecar.releaseLock(lock, breaker) // owner: removes
-    assert(!Sidecar.exists(lock))
-  }
-
   test("contended acquire: exactly one winner among racing claimants") {
     val lock = tmpLock()
     import scala.concurrent.{Await, Future}

@@ -251,4 +251,32 @@ class TombstoneSpec extends GraftSuite {
       "a crashed stage must not delete anything")
     assert(Tombstones.ids(spark, path).isEmpty)
   }
+
+  test("marker reads scan listed batch files: no root path is a glob or an _-named dir") {
+    import spark.implicits._
+    def rootPaths(df: org.apache.spark.sql.DataFrame): Seq[org.apache.hadoop.fs.Path] =
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.collect {
+        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location.rootPaths
+      }.flatten
+    val layout = java.nio.file.Files.createTempDirectory("tomb-roots").toString
+    Tombstones.delete(layout, Seq(1L, 2L).toDF("id"), "id")
+    Tombstones.delete(layout, Seq(3L).toDF("id"), "id")
+    val lex = graft.queries.SessionPublish.tempDir("tomb-roots-lex") + "/idx"
+    graft.pipeline.Retrieval.publishIndex(
+      Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text"), "doc_id", col("text"), lex, 2)
+    graft.pipeline.Retrieval.deleteDocs(spark, lex, Seq(1L))
+    val reads = Seq(
+      "Tombstones.ids" -> Tombstones.ids(spark, layout).get,
+      "Retrieval.readTombstones" -> graft.pipeline.Retrieval.readTombstones(spark, lex).get)
+    for ((name, df) <- reads) {
+      val roots = rootPaths(df)
+      assert(roots.nonEmpty, s"$name: no file relation in the plan")
+      assert(roots.forall(p => !p.toString.contains("*") && !p.getName.startsWith("_")),
+        s"$name read roots $roots")
+    }
+    assert(idsOf(reads.head._2).sorted === Seq(1L, 2L, 3L))
+    assert(idsOf(reads(1)._2) === Seq(1L))
+  }
 }

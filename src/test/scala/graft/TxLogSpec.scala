@@ -150,23 +150,6 @@ class TxLogSpec extends GraftSuite {
     }
   }
 
-  test("legacy rewritable watermark file migrates to the monotone marker on compact") {
-    val dir = graft.queries.SessionPublish.tempDir("txlog-legacy-wm")
-    // a pre-r12 store: rewritable `watermark` file, no markers
-    graft.core.Sidecar.writeString(s"$dir/txlog/watermark", "7")
-    assert(TxLog.watermark(dir) === 7L)
-    // allocation respects the legacy value
-    assert(TxLog.begin(dir) === 8L)
-    TxLog.commit(dir, 8L)
-    TxLog.compact(dir)
-    assert(TxLog.watermark(dir) === 8L)
-    assert(graft.core.Sidecar.exists(s"$dir/txlog/watermark-8"),
-      "compact must publish the monotone marker")
-    assert(!graft.core.Sidecar.exists(s"$dir/txlog/watermark"),
-      "the legacy file is deleted once a covering marker exists")
-    assert(TxLog.isCommitted(dir, 7L) && TxLog.isCommitted(dir, 8L))
-  }
-
   test("a commit FOLDED into the watermark still refuses a late abort (marker-free committed)") {
     // the r12-review hole: compact deletes commit markers once the
     // watermark covers them, so an outcome check against the raw
