@@ -170,10 +170,10 @@ object Retrieval {
     * it; streaming appends write theirs batch-keyed under
     * [[doclensStreamDir]] (same db bucketing, replay-idempotent by
     * overwrite); [[compactIndex]] rebuilds ONE clean sidecar from the
-    * union of both plus the live postings, which also preserves
-    * zero-token docs (they have no postings rows but are counted in
-    * n/Σdl — a postings-only rebuild would silently turn their
-    * post-compact deletes into counter-leaking no-ops).
+    * union of both, which also preserves zero-token docs (they have no
+    * postings rows but are counted in n/Σdl — a postings-only rebuild
+    * would silently turn their post-compact deletes into
+    * counter-leaking no-ops).
     */
   private[graft] def doclensPath(path: String) = s"$path/doclens"
 
@@ -329,8 +329,8 @@ object Retrieval {
     * `maxRecordsPerFile` re-splitting — the same contract as
     * [[Ivf.compactPartitioned]], lexical edition — plus one narrow
     * (id, dl) aggregate rebuilding the [[doclensPath]] sidecar from
-    * the surviving source sidecars unioned with the live postings
-    * (zero-token docs preserved, streamed ids healed). The streaming
+    * the surviving source sidecars (zero-token docs preserved, streamed
+    * ids folded in). The streaming
     * replay markers ARE carried: the compacted postings contain those
     * batches, and losing the markers would make a restarted
     * [[graft.streaming.LexStream]] re-append them. The source layout
